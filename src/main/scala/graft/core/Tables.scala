@@ -85,7 +85,20 @@ object Tables {
   *   - averages/slopes are rounded explicitly on both sides;
   *   - timestamps are emitted as `unix_micros` bigints, dates as strings;
   *   - every result has a total ORDER BY (unique tiebreak) on both sides.
+  *
+  * `oracle` is computed on first use and cached: an oracle compiled from an
+  * external artifact (q47/q48's XGB model) must not load it while the
+  * registry is being assembled, so a missing artifact fails only the
+  * queries built from it.
   */
-final case class GQuery(
-    build: (SparkSession, String) => DataFrame,
-    oracle: Option[String])
+final class GQuery private (
+    val build: (SparkSession, String) => DataFrame,
+    oracleThunk: () => Option[String]) {
+  lazy val oracle: Option[String] = oracleThunk()
+}
+
+object GQuery {
+  def apply(build: (SparkSession, String) => DataFrame,
+      oracle: => Option[String]): GQuery =
+    new GQuery(build, () => oracle)
+}

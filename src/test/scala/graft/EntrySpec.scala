@@ -28,4 +28,13 @@ class EntrySpec extends SparkSpec {
     assert(keys.distinct.size == keys.size,
       s"duplicate short keys: ${keys.diff(keys.distinct).distinct}")
   }
+
+  test("a GQuery's oracle is evaluated on first use, once") {
+    var evaluated = 0
+    val q = graft.core.GQuery((s, _) => s.emptyDataFrame,
+      { evaluated += 1; Some("SELECT 1") })
+    assert(evaluated == 0)
+    assert(q.oracle.contains("SELECT 1") && q.oracle.contains("SELECT 1"))
+    assert(evaluated == 1)
+  }
 }

@@ -7,6 +7,24 @@ class MlSpec extends SparkSpec {
 
   private val refModels = "/root/reference"
 
+  /** The reference's `xgb_<disease>_model.json`, looked up the way
+    * MlQueries finds the ckd model: env `GRAFT_XGB_<DISEASE>_MODEL`, then a
+    * sibling `../reference/` of the checkout, then `refModels`. */
+  private def refModel(disease: String): String = graft.core.Paths.resolve(
+    s"GRAFT_XGB_${disease.toUpperCase}_MODEL",
+    Seq(s"../reference/xgb_${disease}_model.json"), None,
+    s"$refModels/xgb_${disease}_model.json")
+
+  /** These tests pin the reference's own 400-tree models (the golden
+    * probabilities come from exactly them), so they run only where the
+    * artifacts are present. */
+  private def assumeRefModels(paths: String*): Unit =
+    paths.foreach(p => assume(new java.io.File(p).isFile, s"reference model absent: $p"))
+
+  private val cvdPath = refModel("cvd")
+  private val ckdPath = refModel("ckd")
+  private val anemiaPath = refModel("anemia")
+
   test("pipeline params load with the artifact shapes") {
     val p = PipelineParams.default
     assert(p.features.length == 19)
@@ -76,7 +94,8 @@ class MlSpec extends SparkSpec {
   }
 
   test("xgb model loads 400 trees and scores deterministically") {
-    val m = XgbModel.load(s"$refModels/xgb_cvd_model.json")
+    assumeRefModels(cvdPath, ckdPath, anemiaPath)
+    val m = XgbModel.load(cvdPath)
     assert(m.trees.length == 400)
     assert(m.numFeature == 14)
     assert(m.baseScore > 0 && m.baseScore < 1)
@@ -90,20 +109,21 @@ class MlSpec extends SparkSpec {
     val pMissing = m.predictProb(Array.fill(14)(Double.NaN))
     assert(pMissing > 0.0 && pMissing < 1.0)
     // all three shipped models load (ckd/anemia too)
-    assert(XgbModel.load(s"$refModels/xgb_ckd_model.json").trees.length == 400)
-    assert(XgbModel.load(s"$refModels/xgb_anemia_model.json").trees.length == 400)
+    assert(XgbModel.load(ckdPath).trees.length == 400)
+    assert(XgbModel.load(anemiaPath).trees.length == 400)
   }
 
   test("xgb scoring matches independent tree-walker golden probabilities") {
+    assumeRefModels(cvdPath, ckdPath, anemiaPath)
     // Golden file generated by tools/xgb_golden.py — a from-scratch Python
     // walker over the same JSON (float32 comparison semantics, no xgboost
     // dependency): 204 probe vectors incl. threshold-exact boundary values,
     // per-feature-NaN patterns, all-NaN and +/-1e9 extremes, for all 3
     // models. Pins M6 to ground truth rather than structural plausibility.
     val models = Map(
-      "cvd" -> XgbModel.load(s"$refModels/xgb_cvd_model.json"),
-      "ckd" -> XgbModel.load(s"$refModels/xgb_ckd_model.json"),
-      "anemia" -> XgbModel.load(s"$refModels/xgb_anemia_model.json"))
+      "cvd" -> XgbModel.load(cvdPath),
+      "ckd" -> XgbModel.load(ckdPath),
+      "anemia" -> XgbModel.load(anemiaPath))
     val src = scala.io.Source.fromURL(getClass.getResource("/fixtures/xgb_golden.csv"))
     val lines = try src.getLines().drop(1).toVector finally src.close()
     assert(lines.length == 204)
@@ -119,8 +139,9 @@ class MlSpec extends SparkSpec {
   }
 
   test("XgbScoreExpr codegen path matches predictProb on the golden probes") {
+    assumeRefModels(cvdPath)
     import spark.implicits._
-    val model = XgbModel.load(s"$refModels/xgb_cvd_model.json")
+    val model = XgbModel.load(cvdPath)
     val bc = spark.sparkContext.broadcast(model)
     val src = scala.io.Source.fromURL(getClass.getResource("/fixtures/xgb_golden.csv"))
     val rows = try src.getLines().drop(1).filter(_.startsWith("cvd,")).toVector
@@ -138,6 +159,7 @@ class MlSpec extends SparkSpec {
   }
 
   test("q47 margins are bit-identical to a driver-side ensemble walk") {
+    assumeRefModels(ckdPath)
     // Parity for the oracle-exactness chain (XgbSql scaladoc): the Spark
     // column pipeline (codegen XgbScoreExpr.margin over synthesized
     // features) must equal XgbModel.margin recomputed from the raw
@@ -146,7 +168,7 @@ class MlSpec extends SparkSpec {
     val dir = "/root/testdata/sf0.001"
     val got = q47.build(spark, dir)
       .collect().map(r => r.getLong(0) -> r).toMap
-    val model = XgbModel.load(s"$refModels/xgb_ckd_model.json")
+    val model = XgbModel.load(ckdPath)
     val scales = Vector(45.0, 200.0, 2.6, 105.0, 240.0, 8.0, 80.0, 30.0, 12.0, 210.0, 450.0)
     val offs = Vector(5.0, 100.0, 0.4, 15.0, 60.0, 4.0, 20.0, 25.0, 6.0, 40.0, 50.0)
     val raw = spark.read.parquet(s"$dir/customer.parquet")
@@ -197,13 +219,14 @@ class MlSpec extends SparkSpec {
   }
 
   test("end-to-end inference from the FHIR fixture bundle") {
+    assumeRefModels(cvdPath, ckdPath, anemiaPath)
     val fixture = getClass.getResource("/fixtures/bundle1.json").getPath
     val (pat, _, _, obs) = graft.ingest.FhirIngest.curate(spark, fixture)
     val features = FeatureBuilder.buildFeatureTable(pat, obs)
     val out = Scorer.inferAll(spark, features, Map(
-      "cvd" -> s"$refModels/xgb_cvd_model.json",
-      "ckd" -> s"$refModels/xgb_ckd_model.json",
-      "anemia" -> s"$refModels/xgb_anemia_model.json"))
+      "cvd" -> cvdPath,
+      "ckd" -> ckdPath,
+      "anemia" -> anemiaPath))
     val rows = out.collect()
     assert(rows.length == 2)
     rows.foreach { r =>
@@ -221,6 +244,7 @@ class MlSpec extends SparkSpec {
   }
 
   test("pluggable fourth model: the example predm artifact scores through inferAll") {
+    assumeRefModels(cvdPath, ckdPath, anemiaPath)
     // The reference UI names 4 diseases but ships 3 artifacts (test.py:477)
     // — the surface accepts any subset. This proves the OTHER direction:
     // a caller who trains the missing predm model plugs it in with one map
@@ -241,9 +265,9 @@ class MlSpec extends SparkSpec {
     val (pat, _, _, obs) = graft.ingest.FhirIngest.curate(spark, fixture)
     val features = FeatureBuilder.buildFeatureTable(pat, obs)
     val out = Scorer.inferAll(spark, features, Map(
-      "cvd" -> s"$refModels/xgb_cvd_model.json",
-      "ckd" -> s"$refModels/xgb_ckd_model.json",
-      "anemia" -> s"$refModels/xgb_anemia_model.json",
+      "cvd" -> cvdPath,
+      "ckd" -> ckdPath,
+      "anemia" -> anemiaPath,
       "predm" -> predm))
     out.collect().foreach { r =>
       val p = r.getAs[Double]("predm_prob")
