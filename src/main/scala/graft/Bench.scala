@@ -114,14 +114,8 @@ object Bench {
     t.start()
   }
 
-  private def newSession(cpus: String): SparkSession = {
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+  private def newSession(): SparkSession = {
+    val spark = graft.core.Session.local()
     spark.sparkContext.setLogLevel("ERROR")
     activeContext = Some(spark.sparkContext)
     // bring up executor threads, noop committer, codegen paths before
@@ -220,7 +214,7 @@ object Bench {
     * the child's Spark boilerplate flooded the harness's merged
     * stdout+stderr tail and buried every JSON partial the parent printed.
     */
-  private def freshProcessTime(name: String, sfDir: String, cpus: String,
+  private def freshProcessTime(name: String, sfDir: String,
       maxWaitSec: Double): Option[Double] = {
     if (maxWaitSec < 5) return None
     import scala.jdk.CollectionConverters._
@@ -233,7 +227,6 @@ object Bench {
     val pb = new ProcessBuilder(cmd)
     pb.environment().put("SPARK_GRAFT_ONLY", name)
     pb.environment().put("SPARK_GRAFT_SF_DIR", sfDir)
-    pb.environment().put("SPARK_GRAFT_CPUS", cpus)
     pb.environment().remove("SPARK_GRAFT_SHARED")
     pb.environment().put("SPARK_GRAFT_CHILD", "1") // recursion guard
     pb.redirectErrorStream(false)
@@ -329,20 +322,15 @@ object Bench {
     // Files.createTempDirectory("graft_…") dirs share the prefix)
     if (!sys.env.get("SPARK_GRAFT_CHILD").contains("1")) cleanScratch()
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     val shared = sys.env.get("SPARK_GRAFT_SHARED").contains("1")
 
     // dev knob: SPARK_GRAFT_ONLY=q41,q46 times just those queries
-    val only = sys.env.get("SPARK_GRAFT_ONLY")
-      .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
-    val selected = (only match {
-      case Some(keys) => SparkEntry.queries.filter { case (n, _) => keys.exists(n.startsWith) }
-      case None => SparkEntry.queries
-    }).toSeq.sortBy(_._1)
+    val keep = SparkEntry.byPrefix(sys.env.get("SPARK_GRAFT_ONLY"))
+    val selected = SparkEntry.queries.filter(kv => keep(kv._1)).toSeq.sortBy(_._1)
 
     val ref = loadRef()
     val isChild = sys.env.get("SPARK_GRAFT_CHILD").contains("1")
-    var spark = newSession(cpus)
+    var spark = newSession()
     val skipped = scala.collection.mutable.ArrayBuffer.empty[String]
     val suiteResults = selected.flatMap { case (name, fn) =>
       // Internal deadline: past the work budget, remaining queries are
@@ -354,7 +342,7 @@ object Bench {
           spark.stop()
           SparkSession.clearActiveSession()
           SparkSession.clearDefaultSession()
-          spark = newSession(cpus)
+          spark = newSession()
         }
         val t = time(spark, sfDir, fn)
         // A query the WATCHDOG aborted mid-run ran out of wall clock, it
@@ -402,7 +390,7 @@ object Bench {
         if (budget < 5) None
         else {
           rerun += shortKey(name)
-          freshProcessTime(name, sfDir, cpus, math.min(600.0, budget))
+          freshProcessTime(name, sfDir, math.min(600.0, budget))
             .map(f => name -> (if (t < 0) f else math.min(t, f)))
         }
       }.toMap

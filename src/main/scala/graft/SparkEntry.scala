@@ -40,6 +40,16 @@ object SparkEntry {
   def queries: Map[String, (SparkSession, String) => DataFrame] =
     registry.map { case (name, q) => name -> q.build }
 
+  /** Query-name filter for a comma-separated prefix list, as given in
+    * `SPARK_GRAFT_ONLY` or on a tool's command line: a name is kept when it
+    * starts with any trimmed, non-empty entry (`"q41, q46"` keeps q41_… and
+    * q46_…; an empty list keeps nothing). No list keeps every name.
+    */
+  def byPrefix(prefixes: Option[String]): String => Boolean = {
+    val keys = prefixes.map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
+    name => keys.forall(_.exists(name.startsWith))
+  }
+
   /** For each key in queries, equivalent ANSI SQL runnable by DuckDB on the
     * same parquet tables. Omitted for non-SQL-expressible ops.
     */
@@ -55,8 +65,13 @@ object SparkEntry {
       if (!keep(name)) None
       else try q.oracle.map(name -> _)
       catch { case NonFatal(e) =>
-        System.err.println(s"[oracle] $name: $e")
+        if (reported.add(name)) System.err.println(s"[oracle] $name: $e")
         None
       }
     }
+
+  /** Queries whose failed oracle is already on stderr. A [[core.GQuery]]
+    * keeps its oracle's failure, so each is named once per JVM.
+    */
+  private val reported = java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
 }

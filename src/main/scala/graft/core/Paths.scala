@@ -1,8 +1,8 @@
 package graft.core
 
-/** Host-independent resolution for the two artifacts the suite reads
-  * off the filesystem (the FHIR fixture bundle and the reference XGB
-  * model). Lookup order, first hit wins:
+/** Host-independent resolution for the artifacts the suite reads off the
+  * filesystem (the FHIR fixture bundle, the lab-panel CSV and the
+  * reference XGB model). Lookup order, first hit wins:
   *
   *   1. an env override (explicit configuration beats everything);
   *   2. each candidate path, relative paths resolved against the

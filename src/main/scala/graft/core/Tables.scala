@@ -89,12 +89,14 @@ object Tables {
   * `oracle` is computed on first use and cached: an oracle compiled from an
   * external artifact (q47/q48's XGB model) must not load it while the
   * registry is being assembled, so a missing artifact fails only the
-  * queries built from it.
+  * queries built from it. A failure is cached too: every later access
+  * rethrows it without loading the artifact again.
   */
 final class GQuery private (
     val build: (SparkSession, String) => DataFrame,
     oracleThunk: () => Option[String]) {
-  lazy val oracle: Option[String] = oracleThunk()
+  private lazy val outcome = scala.util.Try(oracleThunk())
+  def oracle: Option[String] = outcome.get
 }
 
 object GQuery {

@@ -116,7 +116,7 @@ object TopKStrategy extends SparkStrategy {
   * for a smaller exchange. This bounds partial memory at ~ProbeRows
   * retained rows + pass-through streaming, and pins the measured
   * high-cardinality penalty (26 s vs 5.8 s at 10M rows × 1M groups
-  * before; ≈ window after — tools/ProfileTopK). The FINAL node never
+  * before; ≈ window after — SCALING.md). The FINAL node never
   * skips; its working set is the true answer, k × groups-per-partition.
   */
 case class TopKPerGroupExec(groupExprs: Seq[Expression],

@@ -367,7 +367,7 @@ object Dedup {
     * maxBucket caps the hot set at occurrences/maxBucket entries, further
     * capped at [[MaxHotShingles]]) and sort AFTER every rare shingle, so
     * boilerplate shingles leave the prefixes of any document that has at
-    * least prefixLen rare shingles. Measured (ProfileQ85, sf0.1, 5 000
+    * least prefixLen rare shingles. Measured (SCALING.md, sf0.1, 5 000
     * docs with a shared 30-token header+footer): plain hash order put all
     * 5 000 docs in one prefix bucket — 6.5·10⁷ candidate pairs, 57 s;
     * frequency-aware order: 2.1·10⁵ pairs, max bucket 9. Bloom false
@@ -1459,12 +1459,6 @@ object Dedup {
       .join(broadcast(mapping.withColumnRenamed("component", "__comp")), Seq("id"), "left")
       .select(col("id"), coalesce(col("__comp"), col("id")).as("component"))
   }
-
-  /** [[ccRounds]] opened up for specs (pinning the O(log diameter) round
-    * bound) and the dev profiler (tools.ProfileQ41).
-    */
-  private[graft] def ccProbe(ids: DataFrame, pairs: DataFrame,
-      maxIter: Int = 20): (DataFrame, Int) = ccRounds(ids, pairs, maxIter)
 
   /** The distributed label-propagation loop of [[connectedComponents]],
     * plus the number of rounds actually used. `checkpointDir` switches

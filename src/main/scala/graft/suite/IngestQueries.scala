@@ -195,7 +195,11 @@ object IngestQueries {
 
   // ---- q53: the CSV lab-panel source + dashboard scoring (S5/A3/W2/M10) ----
 
-  private val panelCsv = "/root/repo/src/test/resources/fixtures/lab_panel.csv"
+  // resolved like `fixture` above; the oracle's read_csv gets the same path
+  private val panelCsv = graft.core.Paths.resolve("GRAFT_FIXTURE_LAB_PANEL",
+    Seq("src/test/resources/fixtures/lab_panel.csv"),
+    Some("/fixtures/lab_panel.csv"),
+    "src/test/resources/fixtures/lab_panel.csv")
 
   /** Analyte columns present in the fixture CSV; the other six of the 15
     * (Triglycerides, TotalChol, BUN, Hematocrit, Bilirubin, Albumin) are

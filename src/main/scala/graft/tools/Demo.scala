@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.{Row, SparkSession}
+import org.apache.spark.sql.Row
 import org.apache.spark.sql.functions._
 import graft.ingest.{FhirIngest, LabPanel, LenientFhir}
 import graft.ml.{FeatureBuilder, Scorer}
@@ -18,12 +18,7 @@ object Demo {
   def main(args: Array[String]): Unit = {
     val bundles = args.headOption.getOrElse(
       getClass.getResource("/fixtures/bundle1.json").getPath)
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.core.Session.local()
     spark.sparkContext.setLogLevel("ERROR")
 
     println("== L1: FHIR ingest ==")

@@ -1,7 +1,6 @@
 package graft.tools
 
 import java.nio.file.{Files, Paths}
-import org.apache.spark.sql.SparkSession
 import graft.SparkEntry
 
 /** Dumps `explain("formatted")` for the flagship queries to EXPLAIN.md —
@@ -13,13 +12,8 @@ object Explain {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.001")
     val out = args.lift(1).getOrElse("EXPLAIN.md")
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    // fixed core count: EXPLAIN.md's exchanges print the partition count
+    val spark = graft.core.Session.local(4)
     spark.sparkContext.setLogLevel("ERROR")
 
     val flagships = Seq(

@@ -155,9 +155,8 @@ object RefreshRef {
     // (merged over the existing file, so a partial run never drops
     // entries); full runs leave it unset
     val only = sys.env.get("SPARK_GRAFT_REF_ONLY")
-      .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
     val names = graft.SparkEntry.queries.keys.toSeq.sorted
-      .filter(n => only.forall(_.exists(n.startsWith)))
+      .filter(graft.SparkEntry.byPrefix(only))
     val old = loadOld(outPath)
 
     val unstable = mutable.ArrayBuffer.empty[String]

@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
 
@@ -25,13 +24,7 @@ import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
 object SkewProbe {
   def main(args: Array[String]): Unit = {
     val sizes = if (args.nonEmpty) args.toSeq.map(_.toInt) else Seq(1000, 3000)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false").getOrCreate()
+    val spark = graft.core.Session.local()
     spark.sparkContext.setLogLevel("ERROR")
     import spark.implicits._
 

@@ -30,11 +30,17 @@ class EntrySpec extends SparkSpec {
   }
 
   test("a GQuery's oracle is evaluated on first use, once") {
-    var evaluated = 0
-    val q = graft.core.GQuery((s, _) => s.emptyDataFrame,
-      { evaluated += 1; Some("SELECT 1") })
-    assert(evaluated == 0)
-    assert(q.oracle.contains("SELECT 1") && q.oracle.contains("SELECT 1"))
-    assert(evaluated == 1)
+    import scala.util.{Failure, Success, Try}
+    // a failing oracle (a missing model artifact) is kept too: later
+    // accesses rethrow it instead of loading the artifact again
+    val missing = new java.io.FileNotFoundException("xgb_ckd_model.json")
+    Seq(Success(Some("SELECT 1")), Failure(missing)).foreach { outcome =>
+      var evaluated = 0
+      val q = graft.core.GQuery((s, _) => s.emptyDataFrame,
+        { evaluated += 1; outcome.get })
+      assert(evaluated == 0)
+      assert(Try(q.oracle) == outcome && Try(q.oracle) == outcome)
+      assert(evaluated == 1)
+    }
   }
 }

@@ -3,15 +3,12 @@ package graft
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Shared local session for all suites (one JVM-wide session). */
+/** Shared local session for all suites (one JVM-wide session). The core
+  * count is fixed: the suite's expectations assume 4 shuffle partitions
+  * whatever `SPARK_GRAFT_CPUS` the runner exports.
+  */
 object TestSpark {
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .appName("graft-test")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  lazy val spark: SparkSession = graft.core.Session.local(4)
 }
 
 abstract class SparkSpec extends AnyFunSuite {

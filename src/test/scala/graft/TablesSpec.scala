@@ -5,6 +5,14 @@ import org.apache.spark.sql.functions._
 
 class TablesSpec extends SparkSpec {
 
+  test("the shared test session is core.Session.local(4)") {
+    assert(spark.sparkContext.master == "local[4]")
+    assert(spark.conf.get("spark.sql.shuffle.partitions") == "4")
+    assert(spark.conf.get("spark.sql.adaptive.enabled") == "true")
+    assert(spark.conf.get("spark.sql.session.timeZone") == "UTC")
+    assert(spark.sparkContext.uiWebUrl.isEmpty)
+  }
+
   test("parquetRowCount reads footers for flat files AND partitioned layouts") {
     import spark.implicits._
     // single-file table (the driver testdata layout)
