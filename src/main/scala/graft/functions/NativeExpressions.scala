@@ -261,6 +261,12 @@ object NativeExpressions {
       lineSep: String): Column =
     Bridge.column(GopherStats(Bridge.expression(text), stopWords, lineSep))
 
+  /** The Gopher keep bit (1 or 0) of a [[gopher_stats]] array under `gate`
+    * (see [[GopherKeep]]); 0 for a null array.
+    */
+  def gopher_keep(stats: Column, gate: GopherGate): Column =
+    Bridge.column(GopherKeep(Bridge.expression(stats), gate))
+
   /** Resolve a line-separator pattern (as accepted by `split`) to the
     * single character it matches: either one literal char ("\n") or a
     * backslash-escaped regex metachar ("\\." → '.'). Escaped LETTERS are
@@ -1191,6 +1197,12 @@ object NativeExpressions {
     */
   def portable_token_hashes(toks: Column): Column =
     Bridge.column(PortableTokenHashes(Bridge.expression(toks)))
+
+  /** Whitespace tokens of `text` (see [[WhitespaceTokens]]):
+    * `filter(split(text, "\\s+"), t -> length(t) > 0)` in one compiled pass.
+    */
+  def whitespace_tokens(text: Column): Column =
+    Bridge.column(WhitespaceTokens(Bridge.expression(text)))
 
   /** Engine-portable winnowing bottom-1 fingerprint over
     * `window`-codepoint affine-mod-P windows of the text. See
@@ -2455,6 +2467,49 @@ case class CosineSimilarity(left: Expression, right: Expression)
       newRight: Expression): Expression = copy(left = newLeft, right = newRight)
 }
 
+/** The maximal runs of non-whitespace characters of a string, in order —
+  * exactly `filter(split(text, "\\s+"), t -> length(t) > 0)`, whose
+  * regex `\s` is Java's [ \t\n\x0B\f\r]. Those are all ASCII, and no
+  * byte of a multi-byte UTF-8 sequence is ASCII, so the split runs on the
+  * bytes. The higher-order `filter` is interpreted and cuts whole-stage
+  * codegen at every operator that consumes it; this does neither.
+  */
+case class WhitespaceTokens(child: Expression) extends UnaryExpression {
+
+  override def dataType: DataType = ArrayType(StringType, containsNull = false)
+  override def nullable: Boolean = child.nullable
+
+  override def nullSafeEval(input: Any): Any =
+    WhitespaceTokens.split(input.asInstanceOf[org.apache.spark.unsafe.types.UTF8String])
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+    nullSafeCodeGen(ctx, ev, c =>
+      s"""${ev.value} = graft.functions.WhitespaceTokens.split($c);""")
+
+  override protected def withNewChildInternal(newChild: Expression): Expression =
+    copy(child = newChild)
+}
+
+object WhitespaceTokens {
+  private def isWs(b: Byte): Boolean =
+    b == ' ' || (b >= '\t' && b <= '\r')
+
+  def split(text: org.apache.spark.unsafe.types.UTF8String): ArrayData = {
+    val bytes = text.getBytes
+    val n = bytes.length
+    val out = new scala.collection.mutable.ArrayBuffer[AnyRef]
+    var i = 0
+    while (i < n) {
+      while (i < n && isWs(bytes(i))) i += 1
+      val start = i
+      while (i < n && !isWs(bytes(i))) i += 1
+      if (i > start)
+        out += org.apache.spark.unsafe.types.UTF8String.fromBytes(bytes, start, i - start)
+    }
+    new GenericArrayData(out.toArray)
+  }
+}
+
 /** Engine-portable per-token hashes (see
   * [[NativeExpressions.portableHash62]]): array<string> → array<long>,
   * one tight codepoint loop per token inside whole-stage codegen. Null
@@ -2834,6 +2889,65 @@ case class GopherStats(child: Expression, stopWords: Seq[String],
     val ref = ctx.addReferenceObj("stopWords", stopArr, "java.lang.String[]")
     nullSafeCodeGen(ctx, ev, c =>
       s"""${ev.value} = graft.functions.NativeExpressions.gopherStats($c, $ref, (char) ${sep.toInt});""")
+  }
+
+  override protected def withNewChildInternal(newChild: Expression): Expression =
+    copy(child = newChild)
+}
+
+/** The Gopher quality-gate bounds over a [[GopherStats]] array (see
+  * [[graft.scale.Curation.gopherQualityFlags]]; the defaults are Gopher's
+  * published ones). Every fraction is the exact IEEE quotient of two
+  * counts, and a fraction whose denominator is 0 fails its bound (Gopher
+  * drops empty pages).
+  */
+final case class GopherGate(minWords: Long = 50, maxWords: Long = 100000,
+    minMeanLen: Double = 3.0, maxMeanLen: Double = 10.0,
+    maxSymbolRatio: Double = 0.1, maxBulletFrac: Double = 0.9,
+    maxEllipsisFrac: Double = 0.3, minAlphaFrac: Double = 0.8,
+    minStopHits: Long = 2) {
+
+  /** 1 if the stats pass every bound, else 0. */
+  def keep(stats: ArrayData): Long = {
+    val nW = stats.getLong(0)
+    val nL = stats.getLong(5)
+    def frac(num: Int, den: Long): Double = stats.getLong(num).toDouble / den.toDouble
+    val pass = nW >= minWords && nW <= maxWords && nW > 0 && nL > 0 && {
+      val meanLen = frac(1, nW)
+      meanLen >= minMeanLen && meanLen <= maxMeanLen
+    } && frac(4, nW) <= maxSymbolRatio &&
+      frac(6, nL) <= maxBulletFrac && frac(7, nL) <= maxEllipsisFrac &&
+      frac(2, nW) >= minAlphaFrac && stats.getLong(3) >= minStopHits
+    if (pass) 1L else 0L
+  }
+}
+
+/** The keep bit of a [[GopherStats]] array under a [[GopherGate]], as one
+  * expression over the array. A filter on the bit holds one reference to
+  * the stats, so pushing it below the projection that computes them
+  * inlines ONE kernel call: a filter gets no common-subexpression
+  * elimination, and the gate spelled as column arithmetic over the array
+  * inlined ~21 kernel calls per row.
+  */
+case class GopherKeep(child: Expression, gate: GopherGate)
+    extends UnaryExpression {
+
+  override def dataType: DataType = LongType
+  override def nullable: Boolean = false
+
+  override def eval(input: org.apache.spark.sql.catalyst.InternalRow): Any = {
+    val s = child.eval(input)
+    if (s == null) 0L else gate.keep(s.asInstanceOf[ArrayData])
+  }
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+    import org.apache.spark.sql.catalyst.expressions.codegen.Block._
+    import org.apache.spark.sql.catalyst.expressions.codegen.FalseLiteral
+    val ref = ctx.addReferenceObj("gate", gate)
+    val c = child.genCode(ctx)
+    ev.copy(code = code"""${c.code}
+      long ${ev.value} = ${c.isNull} ? 0L : $ref.keep(${c.value});""",
+      isNull = FalseLiteral)
   }
 
   override protected def withNewChildInternal(newChild: Expression): Expression =

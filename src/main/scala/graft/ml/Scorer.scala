@@ -67,12 +67,27 @@ object Scorer {
     */
   def scoreDisease(spark: SparkSession, df: DataFrame, disease: String,
       modelPath: String, threshold: Double = 0.5): DataFrame = {
-    val model = XgbModel.load(modelPath)
+    val model = loaded(modelPath)
     val bc = spark.sparkContext.broadcast(model)
     val featArray = array(PipelineParams.modelColumns.map(c =>
       coalesce(col(c).cast("double"), lit(Double.NaN))): _*)
     df.withColumn(s"${disease}_prob", XgbScoreExpr.score(featArray, bc))
       .withColumn(s"${disease}_label", col(s"${disease}_prob") > threshold)
+  }
+
+  /** The parsed model of each model file, kept while the file's
+    * modification time and size stay the same: a 400-tree model takes
+    * 28-53 ms to parse, and [[inferAll]] scores three per call. A
+    * rewritten file is parsed again.
+    */
+  private val models =
+    new java.util.concurrent.ConcurrentHashMap[String, ((Long, Long), XgbModel)]
+
+  private[ml] def loaded(path: String): XgbModel = {
+    val f = new java.io.File(path)
+    val stamp = (f.lastModified, f.length)
+    models.compute(f.getAbsolutePath, (_, cur) =>
+      if (cur != null && cur._1 == stamp) cur else stamp -> XgbModel.load(path))._2
   }
 
   /** M7: risk bands (classify_risk, test.py:157-163). */

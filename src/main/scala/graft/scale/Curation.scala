@@ -281,7 +281,8 @@ object Curation {
 
   /** Gopher's document-level quality flags (Rae et al. 2021, §A1.1 —
     * the pre-filter rules MassiveWeb applies before any model-based
-    * scoring), one flag per rule plus the conjunction:
+    * scoring), one value per rule plus the conjunction `keep` under the
+    * bounds of `gate`:
     *
     *   - word count within [minWords, maxWords];
     *   - mean word length within [minMeanLen, maxMeanLen] (kills
@@ -304,11 +305,9 @@ object Curation {
     * bullet_frac, ellipsis_frac, alpha_frac, stop_hits, keep).
     */
   def gopherQualityFlags(docs: DataFrame, idCol: String, textCol: String,
-      lineSep: String = "\n", minWords: Long = 50, maxWords: Long = 100000,
-      minMeanLen: Double = 3.0, maxMeanLen: Double = 10.0,
-      maxSymbolRatio: Double = 0.1, maxBulletFrac: Double = 0.9,
-      maxEllipsisFrac: Double = 0.3, minAlphaFrac: Double = 0.8,
-      minStopHits: Int = 2): DataFrame = {
+      lineSep: String = "\n",
+      gate: graft.functions.GopherGate = graft.functions.GopherGate())
+      : DataFrame = {
     // every count from ONE pass of the native GopherStats kernel — the
     // expression-combinator formulation ran ~10 interpreted HOF passes
     // (split/filter/aggregate/exists×8/rlike-per-token) per document,
@@ -333,18 +332,23 @@ object Curation {
     val bulF = when(nL > 0, nBullet.cast("double") / nL.cast("double"))
     val ellF = when(nL > 0, nEll.cast("double") / nL.cast("double"))
     val alpF = when(nW > 0, nAlpha.cast("double") / nW.cast("double"))
-    val keep = nW.between(minWords, maxWords) &&
-      coalesce(meanLen.between(minMeanLen, maxMeanLen), lit(false)) &&
-      coalesce(symR <= maxSymbolRatio, lit(false)) &&
-      coalesce(bulF <= maxBulletFrac, lit(false)) &&
-      coalesce(ellF <= maxEllipsisFrac, lit(false)) &&
-      coalesce(alpF >= minAlphaFrac, lit(false)) &&
-      stopHits >= minStopHits
+    val keep = graft.functions.NativeExpressions.gopher_keep(g, gate)
     st.select(col("doc_id"), nW.as("n_words"), meanLen.as("mean_word_len"),
       symR.as("symbol_ratio"), bulF.as("bullet_frac"),
       ellF.as("ellipsis_frac"), alpF.as("alpha_frac"),
-      stopHits.as("stop_hits"), keep.cast("long").as("keep"))
+      stopHits.as("stop_hits"), keep.as("keep"))
   }
+
+  /** The [[gopherQualityFlags]] keep bit (1 or 0) of `text` under `gate`,
+    * as one column: one [[graft.functions.GopherStats]] call per row, also
+    * when the optimizer pushes a filter on it below the projection that
+    * computes it.
+    */
+  def gopherKeep(text: Column, gate: graft.functions.GopherGate,
+      lineSep: String = "\n"): Column =
+    graft.functions.NativeExpressions.gopher_keep(
+      graft.functions.NativeExpressions.gopher_stats(text, GopherStopWords, lineSep),
+      gate)
 
   /** Gopher's required-stop-word list (presence of ≥2 ⇒ real prose). */
   val GopherStopWords: Seq[String] =

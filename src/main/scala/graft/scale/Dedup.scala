@@ -1155,7 +1155,7 @@ object Dedup {
     * rows — the same bytes a persist would have stored, without the
     * persist's unbounded lifetime.
     */
-  private[scale] def sharedShuffle(df: DataFrame, key: Column,
+  private[graft] def sharedShuffle(df: DataFrame, key: Column,
       pinned: Boolean = true): DataFrame =
     // PINNED partition count (explicit numbered repartition): the
     // unnumbered form is AQE-coalescible, and on small-byte frames AQE
@@ -1213,19 +1213,37 @@ object Dedup {
     // bucket-size aggregate and the triangle split's probe side), so the
     // caller's upstream kernel — band/block/winnow computation on the raw
     // text — executes exactly once per action with NO persist anywhere in
-    // the pair family. The freeze erases partitioning metadata (an RDD
-    // scan reports unknown partitioning), so the aggregate and join still
-    // plan their own exchanges — but those move post-kernel compact rows,
-    // not recomputed text passes; net bench effect was strongly positive
-    // (q71 halved).
+    // the pair family (net bench effect strongly positive: q71 halved).
+    // The pinned freeze declares its bk hash partitioning, so the size
+    // aggregate and the bucket self-joins below plan no exchange of their
+    // own.
     val k2 = sharedShuffle(keyed, col("bk"))
     val nParts = keyed.sparkSession.sessionState.conf.numShufflePartitions
     val sizes = k2.groupBy(col("bk")).agg(count(lit(1)).as("bucket_n"))
-    // the freeze reports UnknownPartitioning, so this join's exchange is
-    // planner-added and AQE-coalescible — pin it (same rationale as the
-    // triangle join below: the stage ABOVE it carries the per-cell
-    // explode, which must not serialize onto one coalesced partition)
-    val salted = k2.repartition(nParts, col("bk")).join(sizes, "bk")
+    // the largest bucket picks the path (one eager job over the frozen
+    // rows). When no bucket exceeds maxBucket every cell of the triangle
+    // split is the one diagonal cell, so the split would only re-key the
+    // same self-join: join the frozen rows to themselves directly, on the
+    // freeze's own pinned partitions.
+    val largest = sizes.agg(max(col("bucket_n"))).head().get(0)
+    if (largest == null || largest.asInstanceOf[Long] <= maxBucket)
+      k2.as("l").join(k2.as("r"),
+          col("l.bk") === col("r.bk") && col("l.id") < col("r.id"))
+        .select(col("l.id").as("id_a"), col("r.id").as("id_b"),
+          col("l.pv").as("pv_l"), col("r.pv").as("pv_r"))
+    else trianglePairRows(k2, sizes, maxBucket, nParts)
+  }
+
+  /** [[bucketPairRows]] when some bucket exceeds `maxBucket`: the
+    * triangle-decomposition self-join over the frozen (bk, id, pv) rows
+    * and their bucket sizes.
+    */
+  private def trianglePairRows(k2: DataFrame, sizes: DataFrame,
+      maxBucket: Int, nParts: Int): DataFrame = {
+    // no exchange: both sides keep the freeze's pinned bk partitions,
+    // which the stage ABOVE needs (it carries the per-cell explode, which
+    // must not serialize onto one coalesced partition)
+    val salted = k2.join(sizes, "bk")
       .withColumn("m", floor((col("bucket_n") + (maxBucket - 1)) / maxBucket))
       .withColumn("blk", pmod(xxhash64(col("id")), col("m")))
       .select(col("bk"), col("id"), col("pv"), col("m"), col("blk"))
@@ -1321,25 +1339,35 @@ object Dedup {
   def connectedComponents(ids: DataFrame, pairs: DataFrame,
       maxIter: Int = 20, localEdgeLimit: Long = LocalEdgeLimit,
       checkpointDir: Option[String] = None): DataFrame = {
+    componentsOf(ids, pairs, maxIter, localEdgeLimit, checkpointDir)
+      .fold(localComponents(ids, _), identity)
+  }
+
+  /** The decision of [[connectedComponents]]: Left(the complete edge list)
+    * when it holds at most `localEdgeLimit` edges, else Right(the
+    * distributed loop's (id, component) labels).
+    *
+    * ONE probing traversal decides the algorithm AND feeds the local
+    * path: limit(N+1).collect() returns the COMPLETE edge list whenever it
+    * comes back with ≤ N rows (the limit dropped nothing), so the driver
+    * union-find needs no second pass over pairs. Nothing is persisted:
+    * only the distributed path re-consumes pairs (ccRounds checkpoints
+    * its edge frame eagerly, one more pass over the pair plan), and the
+    * local path, which every post-LSH edge set up to a million edges
+    * takes, pays no cache build, no columnar scan and no release.
+    */
+  private def componentsOf(ids: DataFrame, pairs: DataFrame, maxIter: Int,
+      localEdgeLimit: Long, checkpointDir: Option[String])
+      : Either[Array[org.apache.spark.sql.Row], DataFrame] = {
     // the probe materializes up to localEdgeLimit+1 rows on the driver —
     // a limit beyond Int range would overflow `.toInt` into a negative
     // limit (and a >2^31-row driver collect is absurd anyway)
     require(localEdgeLimit >= 0 && localEdgeLimit < Int.MaxValue,
       s"localEdgeLimit must fit an Int collect: $localEdgeLimit")
-    // ONE probing traversal decides the algorithm AND feeds the local
-    // path: limit(N+1).collect() returns the COMPLETE edge list whenever
-    // it comes back with ≤ N rows (the limit dropped nothing), so the
-    // driver union-find needs no second pass over pairs. Only the
-    // distributed path re-consumes pairs — persist covers that replay;
-    // ccRounds eagerly localCheckpoints its edge frame, after which the
-    // persist can drop.
-    val p = pairs.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
-      val probe = p.select(col("id_a"), col("id_b"))
-        .limit((localEdgeLimit + 1).toInt).collect()
-      if (probe.length <= localEdgeLimit) localComponents(ids, probe)
-      else ccRounds(ids, p, maxIter, checkpointDir)._1
-    } finally p.unpersist(blocking = false)
+    val probe = pairs.select(col("id_a"), col("id_b"))
+      .limit((localEdgeLimit + 1).toInt).collect()
+    if (probe.length <= localEdgeLimit) Left(probe)
+    else Right(ccRounds(ids, pairs, maxIter, checkpointDir)._1)
   }
 
   /** Incremental connected components: fold a batch of NEW pairs into an
@@ -1425,29 +1453,7 @@ object Dedup {
       edges: Array[org.apache.spark.sql.Row]): DataFrame = {
     val spark = ids.sparkSession
     val idType = ids.schema("id").dataType
-    val ord: Ordering[Any] = new Ordering[Any] {
-      def compare(a: Any, b: Any): Int = (a, b) match {
-        case (x: Long, y: Long) => java.lang.Long.compare(x, y)
-        case (x: Int, y: Int) => Integer.compare(x, y)
-        case (x: String, y: String) => x.compareTo(y)
-        case _ => sys.error(s"unsupported id type for union-find: $idType")
-      }
-    }
-    val parent = new scala.collection.mutable.HashMap[Any, Any]
-    def find(x: Any): Any = {
-      var r = x
-      while (parent.getOrElse(r, r) != r) r = parent.getOrElse(r, r)
-      var c = x // path compression
-      while (parent.getOrElse(c, c) != c) { val n = parent(c); parent(c) = r; c = n }
-      r
-    }
-    edges.foreach { row =>
-      val (ra, rb) = (find(row.get(0)), find(row.get(1)))
-      if (ra != rb) {
-        if (ord.lt(ra, rb)) parent(rb) = ra else parent(ra) = rb
-      }
-    }
-    val labels = parent.keys.map(k => (k, find(k))).filter { case (k, r) => k != r }
+    val labels = unionFind(edges).filter { case (k, r) => k != r }
     val schema = org.apache.spark.sql.types.StructType(Seq(
       org.apache.spark.sql.types.StructField("id", idType),
       org.apache.spark.sql.types.StructField("component", idType)))
@@ -1458,6 +1464,41 @@ object Dedup {
     ids.select(col("id"))
       .join(broadcast(mapping.withColumnRenamed("component", "__comp")), Seq("id"), "left")
       .select(col("id"), coalesce(col("__comp"), col("id")).as("component"))
+  }
+
+  /** Union-find over a collected edge list (union-by-min + path
+    * compression): every id of an edge mapped to its component's minimum
+    * id (a root maps to itself).
+    */
+  private def unionFind(edges: Array[org.apache.spark.sql.Row])
+      : Map[Any, Any] = {
+    val parent = new scala.collection.mutable.HashMap[Any, Any]
+    def find(x: Any): Any = {
+      var r = x
+      while (parent.getOrElse(r, r) != r) r = parent.getOrElse(r, r)
+      var c = x // path compression
+      while (parent.getOrElse(c, c) != c) { val n = parent(c); parent(c) = r; c = n }
+      r
+    }
+    edges.foreach { row =>
+      val (a, b) = (row.get(0), row.get(1))
+      parent.getOrElseUpdate(a, a); parent.getOrElseUpdate(b, b)
+      val (ra, rb) = (find(a), find(b))
+      if (ra != rb) {
+        if (idOrdering.lt(ra, rb)) parent(rb) = ra else parent(ra) = rb
+      }
+    }
+    parent.keys.map(k => k -> find(k)).toMap
+  }
+
+  /** The order of collected id values (long, int or string ids). */
+  private val idOrdering: Ordering[Any] = new Ordering[Any] {
+    def compare(a: Any, b: Any): Int = (a, b) match {
+      case (x: Long, y: Long) => java.lang.Long.compare(x, y)
+      case (x: Int, y: Int) => Integer.compare(x, y)
+      case (x: String, y: String) => x.compareTo(y)
+      case _ => sys.error(s"unsupported id type for union-find: ${a.getClass}")
+    }
   }
 
   /** The distributed label-propagation loop of [[connectedComponents]],
@@ -1568,9 +1609,13 @@ object Dedup {
     */
   def nearDupSurvivorship(docs: DataFrame, idCol: String, textCol: String,
       shingleSize: Int = 3, numPerm: Int = 64, bands: Int = 16,
-      threshold: Double = 0.6, maxBucket: Int = 1024): DataFrame = {
-    val clusters = nearDupClusters(docs, idCol, textCol, shingleSize, numPerm,
-      bands, threshold, maxBucket)
+      threshold: Double = 0.6, maxBucket: Int = 1024): DataFrame =
+    rankSurvivors(docs, idCol, textCol, nearDupClusters(docs, idCol, textCol,
+      shingleSize, numPerm, bands, threshold, maxBucket))
+
+  /** [[nearDupSurvivorship]]'s ranking over given (id, component) labels. */
+  private def rankSurvivors(docs: DataFrame, idCol: String, textCol: String,
+      clusters: DataFrame): DataFrame = {
     val scored = clusters.join(
       docs.select(col(idCol).as("id"),
         TextOps.tokenCount(col(textCol)).cast("long").as("n_tokens")), "id")
@@ -1582,6 +1627,56 @@ object Dedup {
       .select(col("id"), col("component"), col("n_tokens"), col("csize"),
         (col("id") === col("__bid")).as("is_survivor"))
   }
+
+  /** The rows of `docs` that [[nearDupSurvivorship]] keeps: every document
+    * outside a near-dup cluster, and the best one of each cluster (most
+    * tokens, then smallest id). Same decisions, smaller plan: on the local
+    * components path (at most [[LocalEdgeLimit]] pair edges) the clusters
+    * are solved on the driver, the token counts of their members come
+    * back in one narrow job, and the result is `docs` under one narrow
+    * filter — no label map, no join back, no aggregate. Beyond
+    * `localEdgeLimit` the distributed loop labels the clusters and the
+    * survivors semi-join back.
+    */
+  def nearDupSurvivors(docs: DataFrame, idCol: String, textCol: String,
+      shingleSize: Int = 3, numPerm: Int = 64, bands: Int = 16,
+      threshold: Double = 0.6, maxBucket: Int = 1024,
+      localEdgeLimit: Long = LocalEdgeLimit): DataFrame = {
+    val pairs = minhashDupPairs(docs, idCol, textCol, shingleSize, numPerm,
+      bands, threshold, maxBucket)
+    val ids = docs.select(col(idCol).as("id"))
+    componentsOf(ids, pairs, maxIter = 20, localEdgeLimit, None) match {
+      case Left(edges) =>
+        val root = unionFind(edges)
+        if (root.isEmpty) docs
+        else {
+          val tokens = docs.where(isIn(col(idCol), root.keySet))
+            .select(col(idCol), TextOps.tokenCount(col(textCol)).cast("long"))
+            .collect()
+          // most tokens, then the smallest id (nearDupSurvivorship's rank)
+          val best = tokens.groupBy(r => root(r.get(0))).values.map(_.reduce { (a, b) =>
+            val byTokens = java.lang.Long.compare(a.getLong(1), b.getLong(1))
+            if (byTokens > 0 || (byTokens == 0 && idOrdering.lt(a.get(0), b.get(0)))) a else b
+          }.get(0)).toSet
+          docs.where(!isIn(col(idCol), root.keySet -- best))
+        }
+      case Right(labels) =>
+        docs.join(rankSurvivors(docs, idCol, textCol, labels)
+          .where(col("is_survivor")).select(col("id").as("__sid")),
+          col(idCol) === col("__sid"), "left_semi")
+    }
+  }
+
+  /** `c IN values` as one set-membership test whose generated code does
+    * not depend on the values (they ride the task binary, which Spark
+    * ships once per stage).
+    */
+  private def isIn(c: Column, values: scala.collection.Set[Any]): Column =
+    org.apache.spark.sql.graftbridge.Bridge.column(
+      org.apache.spark.sql.catalyst.expressions.InSet(
+        org.apache.spark.sql.graftbridge.Bridge.expression(c),
+        values.map(org.apache.spark.sql.catalyst.CatalystTypeConverters
+          .convertToCatalyst).toSet))
 
   /** Leakage-safe train/eval split: every near-dup CLUSTER lands wholly on
     * one side, because the split hashes the cluster representative

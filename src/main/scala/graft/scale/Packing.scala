@@ -1,6 +1,6 @@
 package graft.scale
 
-import org.apache.spark.sql.{DataFrame, Dataset}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Sequence packing for LLM training: lay the corpus out as one virtual
@@ -26,42 +26,50 @@ object Packing {
     *      with the broadcast cumulative offset of the partitions before
     *      it.
     *
-    * Both jobs consume the SAME `Dataset.rdd` lineage (a lazy val), so
-    * job 2 reuses job 1's shuffle files — the map stage is skipped, only
-    * the reduce-side read + in-partition sort of 16 B rows reruns. No
+    * Both jobs consume the SAME `queryExecution.toRdd` lineage (a lazy
+    * val), so job 2 reuses job 1's shuffle files — the map stage is
+    * skipped, only the reduce-side read + in-partition sort reruns. No
     * persist: nothing leaks into the caller's cache lifecycle, and the
     * range boundaries (sampled once, when the shared shuffle first
     * materializes) are identical across the two jobs by construction.
     *
     * Ids must be unique (they are the total order's tiebreak-free key);
-    * n must be non-negative. Returns (id, n, prefix).
+    * n must be non-negative. Returns (id, n), the `carry` columns of
+    * `df` (riding the same rows unchanged), then prefix, in id ranges
+    * sorted by id — an order the plan knows, so ordering the result by
+    * id costs nothing. The scan runs on the rows as Spark holds them: no
+    * typed view, so no encoder round trip on either side.
     */
-  def prefixSum(df: DataFrame, idCol: String, nCol: String): DataFrame = {
+  def prefixSum(df: DataFrame, idCol: String, nCol: String,
+      carry: Seq[String] = Nil): DataFrame = {
     val spark = df.sparkSession
-    import spark.implicits._
-    // Alias BEFORE the typed view: `as[(Long, Long)]` keeps the source
-    // column names (doc_id/n_tokens on a parquet scan), so partitioning
-    // on a bare col("_1") would not resolve (the r5 q64 defect — local
-    // tuple relations happened to already be named _1/_2).
-    val ds: Dataset[(Long, Long)] = df
-      .select(col(idCol).cast("long").as("_1"), col(nCol).cast("long").as("_2"))
-      .as[(Long, Long)]
-    val ranged = ds
-      .repartitionByRange(col("_1"))
-      .sortWithinPartitions(col("_1"))
-    val rangedRdd = ranged.rdd // shared lineage: one shuffle, two jobs
+    val ranged = df
+      .select(col(idCol).cast("long").as(idCol) +:
+        col(nCol).cast("long").as(nCol) +: carry.map(col): _*)
+      .repartitionByRange(col(idCol))
+      .sortWithinPartitions(col(idCol))
+    // shared lineage: one shuffle, two jobs
+    val rangedRdd = ranged.queryExecution.toRdd
     val partials = rangedRdd
       .mapPartitionsWithIndex((pid, it) =>
-        Iterator.single(pid -> it.foldLeft(0L)(_ + _._2)))
+        Iterator.single(pid -> it.foldLeft(0L)(_ + _.getLong(1))))
       .collect()
       .sortBy(_._1)
     val offsets = partials.map(_._2).scanLeft(0L)(_ + _)
     val bc = spark.sparkContext.broadcast(offsets)
     val out = rangedRdd.mapPartitionsWithIndex { (pid, it) =>
       var acc = bc.value(pid)
-      it.map { case (id, n) => val p = acc; acc += n; (id, n, p) }
+      val prefix = new org.apache.spark.sql.catalyst.expressions.GenericInternalRow(1)
+      val joined = new org.apache.spark.sql.catalyst.expressions.JoinedRow(null, prefix)
+      it.map { r =>
+        prefix.setLong(0, acc)
+        acc += r.getLong(1)
+        joined.withLeft(r): org.apache.spark.sql.catalyst.InternalRow
+      }
     }
-    out.toDF(idCol, nCol, "prefix")
+    org.apache.spark.sql.graftbridge.Bridge.rangeSortedRows(spark, out,
+      ranged.schema.add("prefix", org.apache.spark.sql.types.LongType, nullable = false),
+      idCol)
   }
 
   /** The pack MANIFEST — what a training-data writer actually consumes:
@@ -176,19 +184,22 @@ object Packing {
     * shuffle beyond the 16-byte prefix-sum rows.
     *
     * Zero-token docs occupy nothing: first_seq = last_seq = the sequence
-    * their empty position falls in.
+    * their empty position falls in. The `carry` columns of `docs` follow
+    * the coordinates, carried through the prefix sum on the same rows.
     */
   def concatChunk(docs: DataFrame, idCol: String, textCol: String,
-      seqLen: Long): DataFrame = {
+      seqLen: Long, carry: Seq[String] = Nil): DataFrame = {
     require(seqLen > 0, s"seqLen must be positive: $seqLen")
-    val counts = docs.select(col(idCol).as("doc_id"),
-      size(TextOps.tokens(col(textCol))).cast("long").as("n_tokens"))
-    prefixSum(counts, "doc_id", "n_tokens")
-      .select(col("doc_id"), col("n_tokens"),
+    val counts = docs.select(col(idCol).as("doc_id") +:
+      size(TextOps.tokens(col(textCol))).cast("long").as("n_tokens") +:
+      carry.map(col): _*)
+    prefixSum(counts, "doc_id", "n_tokens", carry)
+      .select(Seq(col("doc_id"), col("n_tokens"),
         col("prefix").as("start_token"),
         expr(s"prefix div $seqLen").as("first_seq"),
         when(col("n_tokens") > 0,
           expr(s"(prefix + n_tokens - 1) div $seqLen"))
-          .otherwise(expr(s"prefix div $seqLen")).as("last_seq"))
+          .otherwise(expr(s"prefix div $seqLen")).as("last_seq")) ++
+        carry.map(col): _*)
   }
 }

@@ -105,8 +105,10 @@ object Sampling {
     * partitionings, and nested across α (a doc kept at α=0.3 is kept at
     * every larger α, since rate is monotone in α). Scale shape: one
     * map-side-combined count per stratum (the only shuffle, output =
-    * #strata rows), rates computed in-plan on that tiny frame, then a
-    * broadcast join back and a codegen'd narrow filter — the corpus
+    * #strata rows), collected EAGERLY — the call runs that one job —
+    * so the rates are computed on the driver and ride back as one map
+    * literal: the corpus side is a single narrow codegen'd projection,
+    * with no join, no broadcast and no global window, and the corpus
     * itself never reshuffles.
     *
     * Exactness: n_min/n_l is an exact-IEEE quotient of two longs; at
@@ -126,27 +128,40 @@ object Sampling {
     require(alpha >= 0.0 && alpha <= 1.0, s"alpha in [0, 1]: $alpha")
     val e = 1.0 - alpha
     val counts = df.groupBy(strata.as("__stratum"))
-      .agg(count(lit(1)).as("stratum_n"))
-    // global min over the #strata-row counts frame via an unpartitioned
-    // window — ONE lineage, so the corpus is scanned once for the rates
-    // (a second `counts.agg(min)` + crossJoin re-derived counts from the
-    // source and doubled the stats scans). The single-partition window
-    // holds #strata rows, not corpus rows.
-    val ratio = col("__nmin").cast("double") / col("stratum_n").cast("double")
-    val rate =
-      if (e == 0.0) lit(1.0)
-      else if (e == 0.5) sqrt(ratio)
+      .agg(count(lit(1)).as("stratum_n")).collect()
+    // the min runs over every stratum, the NULL one included; the rates
+    // are the exact forms Spark's sqrt (Math.sqrt) and pow
+    // (StrictMath.pow) compute
+    val nmin = if (counts.isEmpty) 0L else counts.map(_.getLong(1)).min
+    def rate(n: Long): Double = {
+      val ratio = nmin.toDouble / n.toDouble
+      if (e == 0.0) 1.0
+      else if (e == 0.5) math.sqrt(ratio)
       else if (e == 1.0) ratio
-      else pow(ratio, lit(e))
-    val rates = counts
-      .withColumn("__nmin", min(col("stratum_n")).over(
-        org.apache.spark.sql.expressions.Window.partitionBy()))
-      .select(col("__stratum"), col("stratum_n"), rate.as("rate"))
-    df.join(broadcast(rates), strata === col("__stratum"))
+      else StrictMath.pow(ratio, e)
+    }
+    import org.apache.spark.sql.catalyst.{CatalystTypeConverters, InternalRow}
+    import org.apache.spark.sql.catalyst.expressions.Literal
+    import org.apache.spark.sql.catalyst.util.{ArrayBasedMapData, GenericArrayData}
+    import org.apache.spark.sql.types._
+    // stratum -> (n, rate): one map literal, whose generated code does not
+    // depend on the values it holds
+    val known = counts.filterNot(_.isNullAt(0))
+    val rates = Literal(
+      new ArrayBasedMapData(
+        new GenericArrayData(known.map(r => CatalystTypeConverters.convertToCatalyst(r.get(0)))),
+        new GenericArrayData(known.map(r => InternalRow(r.getLong(1), rate(r.getLong(1)))))),
+      MapType(df.select(strata).schema.head.dataType,
+        StructType(Seq(StructField("n", LongType, nullable = false),
+          StructField("rate", DoubleType, nullable = false))),
+        valueContainsNull = false))
+    val info = element_at(org.apache.spark.sql.graftbridge.Bridge.column(rates), strata)
+    df.where(strata.isNotNull)
+      .withColumn("stratum_n", info.getField("n"))
+      .withColumn("rate", info.getField("rate"))
       .withColumn("keep",
         (portableBucket(key).cast("double") <
           col("rate") * lit(P31.toDouble)).cast("long"))
-      .drop("__stratum")
   }
 
   /** Deterministic global corpus shuffle into training shards — the

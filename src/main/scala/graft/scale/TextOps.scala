@@ -12,9 +12,12 @@ import org.apache.spark.sql.functions._
   */
 object TextOps {
 
-  /** Whitespace tokenization, empty tokens removed. */
+  /** Whitespace tokenization, empty tokens removed: the non-empty pieces
+    * of `split(text, "\\s+")`, from one compiled kernel
+    * ([[graft.functions.WhitespaceTokens]]).
+    */
   def tokens(text: Column): Column =
-    filter(split(text, "\\s+"), t => length(t) > 0)
+    graft.functions.NativeExpressions.whitespace_tokens(text)
 
   def tokenCount(text: Column): Column = size(tokens(text))
 

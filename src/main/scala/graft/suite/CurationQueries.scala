@@ -614,53 +614,51 @@ object CurationQueries {
     * corpus flows 500 → 354 gated → 338 survivors → 31 held out → 307
     * scored clean → 218 mixed-in packed docs.
     *
-    * Scale shape: stages 1–2 are narrow codegen projections fused into
-    * the scan; the only exchanges are dedup's banded-bucket family
-    * (q24's), contamination's distinct-shingle semi-join, the #strata-row
-    * mix aggregate, and packing's two-job prefix scan — no stage adds a
-    * corpus-wide shuffle beyond its certified standalone plan
-    * (SCALING.md "q204 fused plan" note).
+    * Scale shape: stages 1–2 are one narrow codegen pass over the scan,
+    * frozen behind one id exchange; the other exchanges are dedup's
+    * banded-bucket family (q24's), contamination's distinct-shingle
+    * semi-join, the `clean` freeze the mix reads twice, the #strata-row
+    * mix count, and packing's two-job prefix scan, whose id-ordered
+    * output needs no final sort — no stage adds a corpus-wide shuffle
+    * beyond its certified standalone plan (SCALING.md "q204 fused plan"
+    * note). One operation runs ~20 jobs and needs ~62 generated classes,
+    * inside Spark's default 100-entry codegen cache (SCALING.md "Codegen
+    * cache working set").
     */
   private val q204 = GQuery(
     (s, d) => {
-      // stage-boundary freeze (the Dedup.sharedShuffle lifecycle): each
-      // stage's survivors materialize through ONE id exchange whose
-      // shuffle files every downstream consumer branch reuses — without
-      // it, gated/kept/clean are join-backs whose lineage re-runs the
-      // whole upstream chain (normalize + gate + dedup kernels) once per
-      // consumer, measured 12.4 s → the frozen plan at sf0.1. Row sets
-      // are identical; nothing registers in the block manager.
-      def freeze(df: org.apache.spark.sql.DataFrame)
-          : org.apache.spark.sql.DataFrame =
-        org.apache.spark.sql.graftbridge.Bridge.freezeLineage(
-          df.repartition(col("doc_id")))
       val docs = T.documents(s, d)
       // deterministic dirtying (q157's recipe) so normalization has work
-      val dirty = docs.select(col("doc_id"),
-        concat(lit(" \t"), upper(substring(col("text"), 1, 24)),
-          lit("\r\n"), col("text"), lit("  \n ")).as("text"))
-      val norm = freeze(Curation.normalizeDocuments(dirty, "doc_id", "text")
-        .select(col("id").as("doc_id"), col("text_norm").as("text"))
-        .join(docs.select(col("doc_id"), col("lang")), "doc_id"))
-      val flags = Curation.gopherQualityFlags(norm, "doc_id", "text",
-        minWords = 30, minStopHits = 1)
-      val gated = freeze(norm.join(
-        flags.where(col("keep") === 1L).select("doc_id"), "doc_id"))
-      val surv = graft.scale.Dedup.nearDupSurvivorship(gated, "doc_id",
-        "text", shingleSize = 3, numPerm = 64, bands = 16, threshold = 0.8)
-      val kept = freeze(gated.join(
-        surv.where(col("is_survivor")).select(col("id").as("doc_id")),
-        "doc_id"))
+      val dirty = concat(lit(" \t"), upper(substring(col("text"), 1, 24)),
+        lit("\r\n"), col("text"), lit("  \n "))
+      // normalize + gate: one narrow pass frozen behind ONE id exchange
+      // (the Dedup.sharedShuffle lifecycle) whose shuffle files every
+      // later consumer reuses — the near-dup pair plan, the token lookup,
+      // and the contamination branches all read `gated` — instead of
+      // re-running the scan and both kernels once per consumer. The gate
+      // is one expression over one GopherStats call, also once the
+      // optimizer pushes it below the normalizing projection.
+      val gated = graft.scale.Dedup.sharedShuffle(
+        docs.select(col("doc_id"), col("lang"),
+            graft.functions.NativeExpressions.normalize_ascii_text(dirty)
+              .as("text"))
+          .where(Curation.gopherKeep(col("text"), graft.functions.GopherGate(
+            minWords = 30, minStopHits = 1)) === 1L),
+        col("doc_id"))
+      val kept = graft.scale.Dedup.nearDupSurvivors(gated, "doc_id", "text",
+        shingleSize = 3, numPerm = 64, bands = 16, threshold = 0.8)
       val scored = Curation.contamination(kept, "doc_id", "text",
         trainFrac = 0.1, shingleSize = 3)
-      val clean = freeze(kept.join(
-        scored.where(col("contamination") < 0.5).select("doc_id"), "doc_id"))
-      val mixed = freeze(graft.scale.Sampling.temperatureMix(clean,
+      // the mix reads `clean` twice (its strata counts and the rows), so it
+      // is frozen once rather than decontaminated once per branch
+      val clean = graft.scale.Dedup.sharedShuffle(kept.join(
+        scored.where(col("contamination") < 0.5).select("doc_id"), "doc_id"),
+        col("doc_id"))
+      val mixed = graft.scale.Sampling.temperatureMix(clean,
           col("doc_id"), col("lang"), alpha = 0.5)
         .where(col("keep") === 1L)
-        .select(col("doc_id"), col("lang"), col("text"), col("rate")))
-      graft.scale.Packing.concatChunk(mixed, "doc_id", "text", seqLen = 512L)
-        .join(mixed.select(col("doc_id"), col("lang"), col("rate")), "doc_id")
+      graft.scale.Packing.concatChunk(mixed, "doc_id", "text", seqLen = 512L,
+          carry = Seq("lang", "rate"))
         .select(col("doc_id"), col("lang"), col("rate"), col("n_tokens"),
           col("start_token"), col("first_seq"), col("last_seq"))
         .orderBy(col("doc_id"))

@@ -21,7 +21,9 @@ import graft.SparkEntry
   *
   *  - `run`: the row count, or the full stack trace (Bench and Verify
   *    swallow a query's exception by design); ends `ALL OK` or `FAILED: …`;
-  *  - `time`: wall time and row count per query, then the total;
+  *  - `time`: wall time, row count and the number of classes Spark's
+  *    code generator compiled while the query ran (its generated-code
+  *    cache misses), per query, then the total;
   *  - `stages`: two noop-sink runs per query, each listing its slowest
   *    stages with wall time, tasks, CPU and shuffle volumes;
   *  - `explain`: the formatted plan plus every lineage-frozen subplan,
@@ -67,7 +69,10 @@ object Inspect {
 
   private def time(spark: SparkSession, sfDir: String, qs: Seq[Query]): Unit = {
     var total = 0.0
+    def compiles = org.apache.spark.metrics.source.CodegenMetrics
+      .METRIC_COMPILATION_TIME.getCount
     qs.foreach { case (name, fn) =>
+      val c0 = compiles
       val t0 = System.nanoTime()
       val n = try fn(spark, sfDir).count()
         catch { case e: Throwable =>
@@ -77,7 +82,7 @@ object Inspect {
         finally spark.catalog.clearCache()
       val sec = (System.nanoTime() - t0) / 1e9
       total += sec
-      println(f"[time] $name%-28s $sec%8.2f s  rows=$n")
+      println(f"[time] $name%-28s $sec%8.2f s  rows=$n  compiles=${compiles - c0}")
     }
     println(f"[time] TOTAL $total%.2f s")
   }

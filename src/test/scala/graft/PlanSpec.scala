@@ -544,6 +544,63 @@ class PlanSpec extends SparkSpec {
     assert(!p.contains("CartesianProduct"), p.take(1500))
   }
 
+  test("a pinned freeze declares its real hash partitioning and size") {
+    // the freeze hands the planner what its shuffle produced: the rows'
+    // partition ids are the declared hash partitioning's, and an
+    // aggregate on the key plans no second exchange
+    import spark.implicits._
+    import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
+    val df = (1L to 500L).map(i => (i % 37, i)).toDF("k", "v")
+    val frozen = graft.scale.Dedup.sharedShuffle(df, col("k"))
+    val n = spark.sessionState.conf.numShufflePartitions
+    frozen.queryExecution.optimizedPlan.collectFirst {
+      case r: org.apache.spark.sql.execution.LogicalRDD => r
+    } match {
+      case Some(r) =>
+        assert(r.outputPartitioning.isInstanceOf[HashPartitioning], r.outputPartitioning)
+        assert(r.outputPartitioning.numPartitions == n)
+        assert(r.stats.rowCount.contains(BigInt(500)), r.stats)
+        assert(r.stats.sizeInBytes < BigInt(1L << 20), r.stats)
+      case None => fail(s"no frozen scan:\n${frozen.queryExecution.optimizedPlan}")
+    }
+    val misplaced = frozen.select(spark_partition_id().as("p"),
+        org.apache.spark.sql.graftbridge.Bridge.column(
+          HashPartitioning(Seq(org.apache.spark.sql.graftbridge.Bridge.expression(col("k"))), n)
+            .partitionIdExpression).as("want"))
+      .where(col("p") =!= col("want")).count()
+    assert(misplaced == 0)
+    val agg = plan(frozen.groupBy("k").agg(sum("v")))
+    assert(!agg.contains("Exchange hashpartitioning"), agg)
+  }
+
+  test("the Gopher gate evaluates its stats kernel once per plan (q68, q204's gate)") {
+    // a filter gets no common-subexpression elimination: spelled as column
+    // arithmetic over the stats array, the keep bit inlined ~21 kernel
+    // calls once the optimizer pushed a filter on it below the projection
+    import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+    def kernels(p: LogicalPlan): Int = p.collect { case n =>
+      n.expressions.map(_.collect { case g: graft.functions.GopherStats => g }.size).sum
+    }.sum
+    val q68 = SparkEntry.queries("q68_gopher_quality")(spark, sf)
+    assert(kernels(q68.queryExecution.optimizedPlan) <= 2,
+      q68.queryExecution.optimizedPlan.toString)
+    // q204's gate is its first freeze: witness it through the freeze hook
+    val rec = scala.collection.mutable.Buffer
+      .empty[org.apache.spark.sql.execution.SparkPlan]
+    org.apache.spark.sql.graftbridge.Bridge.recordFrozenPlans.set(rec)
+    try SparkEntry.queries("q204_curation_pipeline")(spark, sf)
+    finally org.apache.spark.sql.graftbridge.Bridge.recordFrozenPlans.remove()
+    val gate = rec.head match {
+      case a: AdaptiveSparkPlanExec => a.context.qe.optimizedPlan
+      case p => fail(s"expected an adaptive plan: $p")
+    }
+    assert(gate.collect { case n => n.expressions.exists(_.find(
+      _.isInstanceOf[graft.functions.GopherKeep]).isDefined) }.contains(true),
+      s"the first freeze is not the gate:\n$gate")
+    assert(kernels(gate) <= 2, gate.toString)
+  }
+
   private def withSQLConf[A](pairs: (String, String)*)(f: => A): A = {
     val conf = spark.conf
     val olds = pairs.map { case (k, _) => k -> conf.getOption(k) }

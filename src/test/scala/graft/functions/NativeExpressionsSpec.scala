@@ -12,6 +12,20 @@ class NativeExpressionsSpec extends SparkSpec {
 
   private val sf = "/root/testdata/sf0.001"
 
+  test("whitespace_tokens == filter(split(text, \\s+), non-empty) on real and crafted text") {
+    import spark.implicits._
+    val crafted = Seq("", " ", "a", "  lead and trail  ", "tab\tnl\ncr\rvt\u000bff\fend",
+      "multi   space\t\t\ttabs", "nbsp\u00a0em\u2003nel\u0085kept", "emoji \ud83d\ude00 ok",
+      "\u00e9t\u00e9 caf\u00e9", null).toDF("text")
+    val docs = T.documents(spark, sf).select(col("text")).union(crafted)
+    val got = docs.select(col("text"),
+      NativeExpressions.whitespace_tokens(col("text")).as("n"),
+      filter(split(col("text"), "\\s+"), t => length(t) > 0).as("h"))
+    val bad = got.where(!(col("n") <=> col("h")))
+    assert(bad.isEmpty, bad.limit(5).collect().mkString("\n"))
+    assert(got.count() > crafted.count())
+  }
+
   test("native minhash == HOF minhash on the documents table") {
     val docs = T.documents(spark, sf)
       .select(col("doc_id"), TextOps.tokens(col("text")).as("toks"))

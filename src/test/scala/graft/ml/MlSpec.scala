@@ -277,4 +277,26 @@ class MlSpec extends SparkSpec {
       assert(r.getAs[Boolean]("q_prediabetes") == (p >= 0.5))
     }
   }
+
+  test("Scorer parses a model file once, and again once it is rewritten") {
+    def write(f: java.io.File, trees: Int): Unit = {
+      val tree = """{"split_indices":[0],"split_conditions":[0.5],""" +
+        """"left_children":[-1],"right_children":[-1],"default_left":[0]}"""
+      val json = """{"learner":{"learner_model_param":{"base_score":"[0.5]",""" +
+        """"num_feature":"14"},"gradient_booster":{"model":{"trees":[""" +
+        Seq.fill(trees)(tree).mkString(",") + "]}}}}"
+      java.nio.file.Files.write(f.toPath, json.getBytes("UTF-8"))
+    }
+    val f = java.io.File.createTempFile("xgb_memo", ".json")
+    try {
+      write(f, 1)
+      val first = Scorer.loaded(f.getPath)
+      assert(Scorer.loaded(f.getPath) eq first)
+      write(f, 2)
+      val second = Scorer.loaded(f.getPath)
+      assert(second ne first)
+      assert(second.trees.length == 2)
+      assert(Scorer.loaded(f.getPath) eq second)
+    } finally f.delete()
+  }
 }

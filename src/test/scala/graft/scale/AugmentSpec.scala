@@ -255,6 +255,27 @@ class AugmentSpec extends SparkSpec {
     assert(t == Map(4L -> true, 5L -> false))
   }
 
+  test("nearDupSurvivors keeps exactly nearDupSurvivorship's survivors, on both components paths") {
+    val base = (1 to 20).map(i => s"tok$i").mkString(" ")
+    val other = (1 to 20).map(i => s"w$i").mkString(" ")
+    val docs = Seq(
+      (1L, base, "a"), (2L, base + " extra tail words", "b"), // 2 beats min id 1
+      (5L, other, "c"), (4L, other, "d"),                     // tie: 4 wins
+      (3L, "completely different content here nothing shared at all", "e")
+    ).toDF("doc_id", "text", "tag")
+    val want = Dedup.nearDupSurvivorship(docs, "doc_id", "text", threshold = 0.8)
+      .where($"is_survivor").select($"id").as[Long].collect().toSet
+    assert(want == Set(2L, 3L, 4L))
+    for (limit <- Seq(Dedup.LocalEdgeLimit, 0L)) {
+      val got = Dedup.nearDupSurvivors(docs, "doc_id", "text", threshold = 0.8,
+        localEdgeLimit = limit)
+      assert(got.columns.toSeq == docs.columns.toSeq, s"limit $limit")
+      assert(got.select($"doc_id").as[Long].collect().toSet == want, s"limit $limit")
+      assert(got.where($"doc_id" === 2L).select($"tag").as[String].collect().toSeq ==
+        Seq("b"), s"limit $limit")
+    }
+  }
+
   // ---------------------------------------------------------------- q162
 
   test("saltedJoin == plain join on a hot-key fixture; salt shapes the plan") {

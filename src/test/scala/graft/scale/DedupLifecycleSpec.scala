@@ -13,8 +13,8 @@ import org.apache.spark.sql.functions._
   * (ReusedExchange / the AQE stage cache), so the text/embedding kernel
   * still runs exactly once per action.
   *
-  * `connectedComponents` is also covered on its local path (its probe
-  * persist must be released by the operator's own try/finally); the
+  * `connectedComponents` is also covered on its local path (its edge
+  * probe persists nothing); the
   * distributed path is exempt by design — its per-round localCheckpoints
   * are released by the ContextCleaner when the returned frame is dropped,
   * which is asynchronous and not assertable here.

@@ -689,6 +689,31 @@ class ScaleSpec extends SparkSpec {
     assert(a == b)
   }
 
+  test("temperature mix == the in-plan join formulation, NULL stratum included") {
+    import spark.implicits._
+    // the NULL stratum (50 rows) is the smallest: it sets n_min, and its
+    // own rows are dropped
+    val df = (1L to 1250L).map { i =>
+      (i, if (i <= 900) Some("en") else if (i <= 1200) Some("de") else None)
+    }.toDF("id", "lang")
+    for (alpha <- Seq(0.5, 0.3)) {
+      val counts = df.groupBy($"lang".as("__s")).agg(count(lit(1)).as("stratum_n"))
+      val nmin = counts.agg(min($"stratum_n")).head().getLong(0)
+      assert(nmin == 50L)
+      val ratio = lit(nmin.toDouble) / $"stratum_n".cast("double")
+      val want = df.join(counts.select($"__s", $"stratum_n",
+          (if (alpha == 0.5) sqrt(ratio) else pow(ratio, lit(1.0 - alpha))).as("rate")),
+          $"lang" === $"__s")
+        .withColumn("keep", (Sampling.portableBucket($"id").cast("double") <
+          $"rate" * lit(2147483647.0)).cast("long"))
+        .drop("__s").orderBy("id").collect().map(_.toSeq).toSeq
+      val got = Sampling.temperatureMix(df, $"id", $"lang", alpha)
+        .orderBy("id").collect().map(_.toSeq).toSeq
+      assert(got.size == 1200)
+      assert(got == want, s"alpha $alpha")
+    }
+  }
+
   test("semantic dedup: cluster assignment, within-cluster groups, representatives") {
     import spark.implicits._
     // two clean semantic clusters around orthogonal axes; ids 1,2 and
