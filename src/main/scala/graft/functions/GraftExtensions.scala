@@ -36,7 +36,7 @@ object GraftExtensions {
     "cosine_similarity" ->
       ((c: Seq[Expression]) => CosineSimilarity(c(0), c(1))),
     "minhash_signature" ->
-      ((c: Seq[Expression]) => MinHashSignature(c.head, intArg(c, 1, 64), 2147483647L)),
+      ((c: Seq[Expression]) => MinHashSignature(c.head, intArg(c, 1, 64))),
     "simhash64" ->
       ((c: Seq[Expression]) => SimHash64(c.head)),
     "rolling_hash_min" ->

@@ -7,51 +7,98 @@ import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.graftbridge.Bridge
 
-/** Native Catalyst expressions (with whole-stage codegen) for the two hot
-  * kernels of the scale layer, replacing interpreted higher-order-function
-  * chains:
+/** Native Catalyst expressions (with whole-stage codegen) for the text,
+  * hash and vector kernels of the scale layer, replacing interpreted
+  * higher-order-function chains that fall out of whole-stage codegen.
   *
-  *  - [[MinHashSignature]]: one pass over the hashed-shingle array computes
-  *    all `numPerm` minima (the HOF formulation re-traverses the array once
-  *    per permutation and allocates an array per perm — 64× the passes);
-  *  - [[CosineSimilarity]]: fused dot/norms in a single loop over two
-  *    float/double arrays (the `aggregate`/`zip_with` formulation allocates
-  *    three intermediate arrays per row).
+  * Each kernel has ONE implementation: a Scala method (here or on the
+  * expression's companion) that takes the row's inputs plus the kernel's
+  * arrays, maps and constants as parameters. `nullSafeEval` calls it, and
+  * `doGenCode` registers those arrays/maps/broadcasts with
+  * `ctx.addReferenceObj` and emits a one-line `nullSafeCodeGen` call to
+  * the same method — no loop is ever written a second time as a Java
+  * source string. NativeExpressionsSpec compiles kernels with
+  * `GenerateUnsafeProjection` and checks the generated code against `eval`.
   *
-  * Both keep bit-exact parity with their expression-combinator twins
+  * Kernels keep bit-exact parity with their expression-combinator twins
   * (same fold order), so oracle results are unchanged.
   */
 object NativeExpressions {
 
-  /** Deterministic affine hash family — shared by the HOF and native
-    * implementations (must stay identical to Dedup.perms).
+  /** The MinHash modulus, 2^31 − 1 (Mersenne): `a·x + b` stays below 2^63
+    * for every x in [0, Prime). A literal constant, so `% Prime` compiles
+    * to a constant divisor inside [[minhashImpl]].
     */
-  def minhashPerms(numPerm: Int, prime: Long): (Array[Long], Array[Long]) = {
+  final val Prime = 2147483647L
+
+  /** Deterministic affine hash family (a_i, b_i), i in [0, numPerm) — shared
+    * by the HOF formulation ([[graft.scale.Dedup.minhashSignature]]) and
+    * the native kernels.
+    */
+  def minhashPerms(numPerm: Int): (Array[Long], Array[Long]) = {
     val as = new Array[Long](numPerm)
     val bs = new Array[Long](numPerm)
     var i = 0
     while (i < numPerm) {
-      val a = 1L + 2654435761L * (i + 1) % (prime - 1)
-      as(i) = a % (prime - 1) + 1
-      bs(i) = 2246822519L * (i + 1) % prime
+      val a = 1L + 2654435761L * (i + 1) % (Prime - 1)
+      as(i) = a % (Prime - 1) + 1
+      bs(i) = 2246822519L * (i + 1) % Prime
       i += 1
     }
     (as, bs)
   }
 
-  def minhash_signature(hashedShingles: Column, numPerm: Int = 64,
-      prime: Long = 2147483647L): Column =
-    Bridge.column(MinHashSignature(
-      Bridge.expression(hashedShingles), numPerm, prime))
+  def minhash_signature(hashedShingles: Column, numPerm: Int = 64): Column =
+    Bridge.column(MinHashSignature(Bridge.expression(hashedShingles), numPerm))
 
   /** [[MinHashSignature]] with the pmod fold-in (see
     * [[MinHashSignatureMod]]): takes RAW 64-bit shingle hashes and
-    * reduces each to [0, prime) inside the perm loop — replaces the
-    * interpreted `transform(sh, x -> pmod(x, prime))` pre-pass.
+    * reduces each to [0, Prime) inside the perm loop — replaces the
+    * interpreted `transform(sh, x -> pmod(x, Prime))` pre-pass.
     */
-  def minhash_signature_mod(sh: Column, numPerm: Int = 64,
-      prime: Long = 2147483647L): Column =
-    Bridge.column(MinHashSignatureMod(Bridge.expression(sh), numPerm, prime))
+  def minhash_signature_mod(sh: Column, numPerm: Int = 64): Column =
+    Bridge.column(MinHashSignatureMod(Bridge.expression(sh), numPerm))
+
+  /** Shared JVM implementation for [[MinHashSignature]] and
+    * [[MinHashSignatureMod]]: for each perm i, min over the elements x of
+    * (pa(i)·x + pb(i)) mod Prime, every minimum starting at Long.MaxValue.
+    * With `reduce` each x is first brought into [0, Prime) by the positive
+    * mod (`pmod`; Java `%` keeps the sign); without it x is used as given.
+    */
+  def minhashImpl(arr: ArrayData, pa: Array[Long], pb: Array[Long],
+      reduce: Boolean): ArrayData = {
+    val numPerm = pa.length
+    val out = new Array[Long](numPerm)
+    java.util.Arrays.fill(out, Long.MaxValue)
+    val n = arr.numElements()
+    var j = 0
+    while (j < n) {
+      var x = arr.getLong(j)
+      if (reduce) { x %= Prime; if (x < 0) x += Prime }
+      var i = 0
+      while (i < numPerm) {
+        val h = (pa(i) * x + pb(i)) % Prime
+        if (h < out(i)) out(i) = h
+        i += 1
+      }
+      j += 1
+    }
+    new GenericArrayData(out)
+  }
+
+  /** `out` sorted ascending with adjacent duplicates dropped (sorts in
+    * place).
+    */
+  private def sortedDistinct(out: Array[Long]): ArrayData = {
+    java.util.Arrays.sort(out)
+    var w = 0
+    var k = 0
+    while (k < out.length) {
+      if (k == 0 || out(k) != out(k - 1)) { out(w) = out(k); w += 1 }
+      k += 1
+    }
+    new GenericArrayData(java.util.Arrays.copyOf(out, w))
+  }
 
   /** Sorted-distinct rotate-XOR shingle set straight from a whitespace
     * split (see [[XxhashShingleSet]]): skip empty tokens, xxhash64 each,
@@ -83,35 +130,19 @@ object NativeExpressions {
       }
       i += 1
     }
-    if (m >= n) {
-      val out = new Array[Long](m - n + 1)
-      var s = 0
-      while (s + n <= m) {
-        var acc = 0L
-        var j = 0
-        while (j < n) {
-          acc = ((acc << 5) | (acc >>> 59)) ^ th(s + j)
-          j += 1
-        }
-        out(s) = acc
-        s += 1
-      }
-      java.util.Arrays.sort(out)
-      var w = 0
-      var k = 0
-      while (k < out.length) {
-        if (k == 0 || out(k) != out(k - 1)) { out(w) = out(k); w += 1 }
-        k += 1
-      }
-      new GenericArrayData(java.util.Arrays.copyOf(out, w))
-    } else {
+    // rotl5-XOR fold of th[from, from + len) from seed 0
+    def fold(from: Int, len: Int): Long = {
       var acc = 0L
       var j = 0
-      while (j < m) {
-        acc = ((acc << 5) | (acc >>> 59)) ^ th(j)
-        j += 1
-      }
-      new GenericArrayData(Array(acc))
+      while (j < len) { acc = ((acc << 5) | (acc >>> 59)) ^ th(from + j); j += 1 }
+      acc
+    }
+    if (m < n) new GenericArrayData(Array(fold(0, m)))
+    else {
+      val out = new Array[Long](m - n + 1)
+      var s = 0
+      while (s < out.length) { out(s) = fold(s, n); s += 1 }
+      sortedDistinct(out)
     }
   }
 
@@ -119,12 +150,74 @@ object NativeExpressions {
     Bridge.column(CosineSimilarity(
       Bridge.expression(a), Bridge.expression(b)))
 
+  /** Shared JVM implementation for [[CosineSimilarity]]: dot and both
+    * norms in one left-to-right pass over the first min(|a|, |b|)
+    * elements, in double; `aFloat`/`bFloat` select float element access
+    * (fixed per expression, so the branch is loop-invariant). Zero norm →
+    * 0.0.
+    */
+  def cosineImpl(a: ArrayData, b: ArrayData, aFloat: Boolean,
+      bFloat: Boolean): Double = {
+    val n = math.min(a.numElements(), b.numElements())
+    var dot = 0.0; var na = 0.0; var nb = 0.0
+    var i = 0
+    while (i < n) {
+      val x = if (aFloat) a.getFloat(i).toDouble else a.getDouble(i)
+      val y = if (bFloat) b.getFloat(i).toDouble else b.getDouble(i)
+      dot += x * y; na += x * x; nb += y * y
+      i += 1
+    }
+    if (math.sqrt(na) > 0 && math.sqrt(nb) > 0)
+      dot / (math.sqrt(na) * math.sqrt(nb))
+    else 0.0
+  }
+
   def sorted_long_overlap(a: Column, b: Column): Column =
     Bridge.column(SortedLongOverlap(
       Bridge.expression(a), Bridge.expression(b)))
 
+  /** Shared JVM implementation for [[SortedLongOverlap]]: one merge pass
+    * over two ascending arrays; a run of equal elements counts once.
+    */
+  def sortedLongOverlapImpl(a: ArrayData, b: ArrayData): Long = {
+    val na = a.numElements(); val nb = b.numElements()
+    var i = 0; var j = 0; var o = 0L
+    while (i < na && j < nb) {
+      val x = a.getLong(i); val y = b.getLong(j)
+      if (x == y) {
+        o += 1; i += 1; j += 1
+        while (i < na && a.getLong(i) == x) i += 1
+        while (j < nb && b.getLong(j) == y) j += 1
+      } else if (x < y) i += 1
+      else j += 1
+    }
+    o
+  }
+
   def simhash64(tokenHashes: Column): Column =
     Bridge.column(SimHash64(Bridge.expression(tokenHashes)))
+
+  /** Shared JVM implementation for [[SimHash64]]: per-bit ±1 votes over
+    * the token hashes; a bit is set when its vote is positive.
+    */
+  def simhash64Impl(arr: ArrayData): Long = {
+    val n = arr.numElements()
+    val votes = new Array[Int](64)
+    var j = 0
+    while (j < n) {
+      val h = arr.getLong(j)
+      var i = 0
+      while (i < 64) {
+        if (((h >>> i) & 1L) == 1L) votes(i) += 1 else votes(i) -= 1
+        i += 1
+      }
+      j += 1
+    }
+    var out = 0L
+    var i = 0
+    while (i < 64) { if (votes(i) > 0) out |= (1L << i); i += 1 }
+    out
+  }
 
   /** Encode a word column with a learned BPE merge list (rank order). */
   def bpe_encode(word: Column, merges: Seq[(String, String)]): Column =
@@ -178,6 +271,22 @@ object NativeExpressions {
   def bucket_weight_sum(hashes: Column,
       weights: org.apache.spark.broadcast.Broadcast[Array[Double]]): Column =
     Bridge.column(BucketWeightSum(Bridge.expression(hashes), weights))
+
+  /** Shared JVM implementation for [[BucketWeightSum]]: the left-to-right
+    * sum of w((h mod B + B) mod B) over the hashes, B = |w|.
+    */
+  def bucketWeightSumImpl(arr: ArrayData, w: Array[Double]): Double = {
+    val b = w.length
+    var acc = 0.0
+    var i = 0
+    val n = arr.numElements()
+    while (i < n) {
+      val idx = ((arr.getLong(i) % b) + b) % b
+      acc += w(idx.toInt)
+      i += 1
+    }
+    acc
+  }
 
   /** Per-pattern Aho–Corasick occurrence counts over text (see
     * [[AhoCorasickCounts]]): array<long> indexed like the automaton's
@@ -1073,6 +1182,36 @@ object NativeExpressions {
       langs: Seq[String]): Column =
     Bridge.column(TextStats(Bridge.expression(toks), stopwords, langs))
 
+  /** Shared JVM implementation for [[TextStats]]: `maskMap` maps each
+    * stopword to the bitmask of the `nLangs` languages listing it (bit i =
+    * langs(i)). Null tokens are non-matches, as in the HOF reference.
+    */
+  def textStatsImpl(arr: ArrayData,
+      maskMap: java.util.HashMap[org.apache.spark.unsafe.types.UTF8String, Integer],
+      nLangs: Int): ArrayData = {
+    val n = arr.numElements()
+    val out = new Array[Long](2 + nLangs)
+    var j = 0
+    while (j < n) {
+      val t = arr.getUTF8String(j)
+      if (t != null) {
+        out(0) += t.numChars()
+        val m = maskMap.get(t)
+        if (m != null) {
+          out(1) += 1
+          val mi = m.intValue()
+          var b = 0
+          while (b < nLangs) {
+            if ((mi & (1 << b)) != 0) out(2 + b) += 1
+            b += 1
+          }
+        }
+      }
+      j += 1
+    }
+    new GenericArrayData(out)
+  }
+
   /** Deterministic ±1 hyperplane component for (table, plane i, dim j) —
     * splitmix64 avalanche. THE single definition shared by the HOF
     * formulation (Similarity.hyperplaneSig) and the native
@@ -1092,6 +1231,33 @@ object NativeExpressions {
     */
   def hyperplane_sigs(v: Column, dim: Int, bits: Int, tables: Int): Column =
     Bridge.column(HyperplaneSigs(Bridge.expression(v), dim, bits, tables))
+
+  /** Shared JVM implementation for [[HyperplaneSigs]]: `signs` holds
+    * [[hyperplaneSign]] laid out [(t·bits + i)·dim + j]; bit i of table t's
+    * signature is set when the projection Σ_j v[j]·sign is > 0, j-ascending
+    * over the first min(dim, |v|) elements.
+    */
+  def hyperplaneSigsImpl(arr: ArrayData, signs: Array[Double], dim: Int,
+      bits: Int, tables: Int): ArrayData = {
+    val n = math.min(dim, arr.numElements())
+    val out = new Array[Long](tables)
+    var t = 0
+    while (t < tables) {
+      var sig = 0L
+      var i = 0
+      while (i < bits) {
+        var proj = 0.0
+        val base = (t * bits + i) * dim
+        var j = 0
+        while (j < n) { proj += arr.getDouble(j) * signs(base + j); j += 1 }
+        if (proj > 0) sig |= 1L << i
+        i += 1
+      }
+      out(t) = sig
+      t += 1
+    }
+    new GenericArrayData(out)
+  }
 
   /** Minimum Rabin-Karp rolling hash over all `window`-byte windows of the
     * UTF-8 text (winnowing bottom-1 sketch at character level).
@@ -1198,6 +1364,22 @@ object NativeExpressions {
   def portable_token_hashes(toks: Column): Column =
     Bridge.column(PortableTokenHashes(Bridge.expression(toks)))
 
+  /** Shared JVM implementation for [[PortableTokenHashes]]: one
+    * [[portableHash62]] per token; a null token hashes as the empty string.
+    */
+  def portableTokenHashesImpl(arr: ArrayData): ArrayData = {
+    val n = arr.numElements()
+    val out = new Array[Long](n)
+    var i = 0
+    while (i < n) {
+      val t = arr.getUTF8String(i)
+      out(i) = portableHash62(
+        if (t == null) org.apache.spark.unsafe.types.UTF8String.EMPTY_UTF8 else t)
+      i += 1
+    }
+    new GenericArrayData(out)
+  }
+
   /** Whitespace tokens of `text` (see [[WhitespaceTokens]]):
     * `filter(split(text, "\\s+"), t -> length(t) > 0)` in one compiled pass.
     */
@@ -1261,39 +1443,47 @@ object NativeExpressions {
   def portable_distinct_shingles(th: Column, n: Int): Column =
     Bridge.column(PortableDistinctShingles(Bridge.expression(th), n))
 
-  /** Shared JVM implementation for [[PortableDistinctShingles]]: one pass
-    * to hash every window (same fold as [[portableShingleMin]]), then
-    * sort + adjacent-dedup. O(k log k) per doc, zero boxing.
+  /** The portable shingle hash of the `n` token hashes starting at `from`:
+    * fold (acc·31 + pmod(x, P)) mod P from seed 17, P = 2^31 − 1. Inputs
+    * reduce with a POSITIVE mod (Java `%` preserves sign), matching the
+    * `pmod` of the HOF reference — the operators are generic over the
+    * token hash, so negative inputs (xxhash64) must fold identically, not
+    * just the non-negative portable family. The one fold behind
+    * [[portableShingleMin]], [[portableShinglesImpl]] and
+    * [[portableDistinctShingles]]; an input shorter than the shingle size
+    * folds whole (`from` = 0, `n` = its length) into one shingle.
     */
-  def portableDistinctShingles(arr: ArrayData, n: Int): ArrayData = {
-    val P = 2147483647L
-    def red(x: Long): Long = { val r = x % P; if (r < 0) r + P else r }
+  private def portableShingleFold(arr: ArrayData, from: Int, n: Int): Long = {
+    var h = 17L
+    var j = 0
+    while (j < n) {
+      val r = arr.getLong(from + j) % Prime
+      h = (h * 31L + (if (r < 0) r + Prime else r)) % Prime
+      j += 1
+    }
+    h
+  }
+
+  /** Every window's [[portableShingleFold]] in position order (one
+    * whole-input fold when shorter than `n`).
+    */
+  private def portableShingleArray(arr: ArrayData, n: Int): Array[Long] = {
     val len = arr.numElements()
-    if (len >= n) {
+    if (len < n) Array(portableShingleFold(arr, 0, len))
+    else {
       val out = new Array[Long](len - n + 1)
       var i = 0
-      while (i + n <= len) {
-        var h = 17L
-        var j = 0
-        while (j < n) { h = (h * 31L + red(arr.getLong(i + j))) % P; j += 1 }
-        out(i) = h
-        i += 1
-      }
-      java.util.Arrays.sort(out)
-      var w = 0
-      var k = 0
-      while (k < out.length) {
-        if (k == 0 || out(k) != out(k - 1)) { out(w) = out(k); w += 1 }
-        k += 1
-      }
-      new GenericArrayData(java.util.Arrays.copyOf(out, w))
-    } else {
-      var h = 17L
-      var i = 0
-      while (i < len) { h = (h * 31L + red(arr.getLong(i))) % P; i += 1 }
-      new GenericArrayData(Array(h))
+      while (i < out.length) { out(i) = portableShingleFold(arr, i, n); i += 1 }
+      out
     }
   }
+
+  /** Shared JVM implementation for [[PortableDistinctShingles]]: one pass
+    * to hash every window, then sort + adjacent-dedup. O(k log k) per doc,
+    * zero boxing.
+    */
+  def portableDistinctShingles(arr: ArrayData, n: Int): ArrayData =
+    sortedDistinct(portableShingleArray(arr, n))
 
   /** The portable shingle hashes IN ORDER, non-distinct — the occurrence
     * stream DSIR-style n-gram counting consumes (occurrence counts, so
@@ -1310,55 +1500,24 @@ object NativeExpressions {
     * same window fold as [[portableDistinctShingles]] minus the
     * sort+dedup. O(k·n) per doc, zero boxing.
     */
-  def portableShinglesImpl(arr: ArrayData, n: Int): ArrayData = {
-    val P = 2147483647L
-    def red(x: Long): Long = { val r = x % P; if (r < 0) r + P else r }
-    val len = arr.numElements()
-    if (len >= n) {
-      val out = new Array[Long](len - n + 1)
-      var i = 0
-      while (i + n <= len) {
-        var h = 17L
-        var j = 0
-        while (j < n) { h = (h * 31L + red(arr.getLong(i + j))) % P; j += 1 }
-        out(i) = h
-        i += 1
-      }
-      new GenericArrayData(out)
-    } else {
-      var h = 17L
-      var i = 0
-      while (i < len) { h = (h * 31L + red(arr.getLong(i))) % P; i += 1 }
-      new GenericArrayData(Array(h))
-    }
-  }
+  def portableShinglesImpl(arr: ArrayData, n: Int): ArrayData =
+    new GenericArrayData(portableShingleArray(arr, n))
 
-  /** Shared JVM implementation for [[PortableShingleMin]]. Inputs reduce
-    * with a POSITIVE mod (Java `%` preserves sign), matching the `pmod` of
-    * the HOF reference — the operators are generic over the token hash, so
-    * negative inputs (xxhash64) must fold identically, not just the
-    * non-negative portable family.
+  /** Shared JVM implementation for [[PortableShingleMin]]: the minimum
+    * window fold, with no per-row array.
     */
   def portableShingleMin(arr: ArrayData, n: Int): Long = {
-    val P = 2147483647L
-    def red(x: Long): Long = { val r = x % P; if (r < 0) r + P else r }
     val len = arr.numElements()
-    if (len >= n) {
+    if (len < n) portableShingleFold(arr, 0, len)
+    else {
       var best = Long.MaxValue
       var i = 0
       while (i + n <= len) {
-        var h = 17L
-        var j = 0
-        while (j < n) { h = (h * 31L + red(arr.getLong(i + j))) % P; j += 1 }
+        val h = portableShingleFold(arr, i, n)
         if (h < best) best = h
         i += 1
       }
       best
-    } else {
-      var h = 17L
-      var i = 0
-      while (i < len) { h = (h * 31L + red(arr.getLong(i))) % P; i += 1 }
-      h
     }
   }
 
@@ -1702,133 +1861,54 @@ object NativeExpressions {
   }
 }
 
-/** minhash over pre-hashed shingles (values in [0, prime)): for each perm i,
-  * min_x((a_i·x + b_i) mod prime). Null input → null; an empty array leaves
-  * every permutation's minimum at its Long.MaxValue initializer (an
-  * out-of-band "no shingle" sentinel — every real hash is < prime <
-  * Long.MaxValue). The case is unreachable in practice: hashedShingles
-  * emits a 1-element array even for docs shorter than the shingle size.
+/** The MinHash kernels' shared body (see [[NativeExpressions.minhashImpl]]);
+  * `reduce` selects the positive-mod pre-reduction of each element.
+  * Serializable so that tasks can deserialize the `reduce` field (a case
+  * class is Serializable, but its abstract parent is not by default).
   */
-case class MinHashSignature(child: Expression, numPerm: Int, prime: Long)
-    extends UnaryExpression {
+sealed abstract class MinHashKernel(reduce: Boolean) extends UnaryExpression
+    with Serializable {
+  def numPerm: Int
 
   override def dataType: DataType = ArrayType(LongType, containsNull = false)
   override def nullable: Boolean = child.nullable
 
-  @transient private lazy val (pa, pb) =
-    NativeExpressions.minhashPerms(numPerm, prime)
+  @transient private lazy val (pa, pb) = NativeExpressions.minhashPerms(numPerm)
 
-  override def nullSafeEval(input: Any): Any = {
-    val arr = input.asInstanceOf[ArrayData]
-    val n = arr.numElements()
-    val out = new Array[Long](numPerm)
-    var i = 0
-    while (i < numPerm) { out(i) = Long.MaxValue; i += 1 }
-    var j = 0
-    while (j < n) {
-      val x = arr.getLong(j)
-      var i2 = 0
-      while (i2 < numPerm) {
-        val h = (pa(i2) * x + pb(i2)) % prime
-        if (h < out(i2)) out(i2) = h
-        i2 += 1
-      }
-      j += 1
-    }
-    new GenericArrayData(out)
-  }
+  override def nullSafeEval(input: Any): Any =
+    NativeExpressions.minhashImpl(input.asInstanceOf[ArrayData], pa, pb, reduce)
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
     val paRef = ctx.addReferenceObj("pa", pa, "long[]")
     val pbRef = ctx.addReferenceObj("pb", pb, "long[]")
-    nullSafeCodeGen(ctx, ev, c => {
-      val out = ctx.freshName("out")
-      val j = ctx.freshName("j")
-      val i = ctx.freshName("i")
-      val x = ctx.freshName("x")
-      val h = ctx.freshName("h")
-      s"""
-        long[] $out = new long[$numPerm];
-        java.util.Arrays.fill($out, Long.MAX_VALUE);
-        for (int $j = 0; $j < $c.numElements(); $j++) {
-          long $x = $c.getLong($j);
-          for (int $i = 0; $i < $numPerm; $i++) {
-            long $h = ($paRef[$i] * $x + $pbRef[$i]) % ${prime}L;
-            if ($h < $out[$i]) $out[$i] = $h;
-          }
-        }
-        ${ev.value} = new org.apache.spark.sql.catalyst.util.GenericArrayData($out);
-      """
-    })
+    nullSafeCodeGen(ctx, ev, c =>
+      s"""${ev.value} = graft.functions.NativeExpressions.minhashImpl($c, $paRef, $pbRef, $reduce);""")
   }
+}
 
+/** minhash over pre-hashed shingles (values in [0, Prime)): for each perm i,
+  * min_x((a_i·x + b_i) mod Prime). Null input → null; an empty array leaves
+  * every permutation's minimum at its Long.MaxValue initializer (an
+  * out-of-band "no shingle" sentinel — every real hash is < Prime <
+  * Long.MaxValue). The case is unreachable in practice: hashedShingles
+  * emits a 1-element array even for docs shorter than the shingle size.
+  */
+case class MinHashSignature(child: Expression, numPerm: Int)
+    extends MinHashKernel(reduce = false) {
   override protected def withNewChildInternal(newChild: Expression): Expression =
     copy(child = newChild)
 }
 
 /** [[MinHashSignature]] over RAW 64-bit shingle hashes: each element is
-  * first reduced to [0, prime) with the positive mod (`pmod` semantics —
+  * first reduced to [0, Prime) with the positive mod (`pmod` semantics —
   * Java `%` preserves sign), then folded through the same perm family.
-  * Bit-identical to `MinHashSignature(transform(sh, x -> pmod(x, prime)))`
+  * Bit-identical to `MinHashSignature(transform(sh, x -> pmod(x, Prime)))`
   * without the interpreted transform pre-pass (HOFs are CodegenFallback
   * and allocated one boxed array per row in the hottest kernel of the
   * minhash family — NativeExpressionsSpec pins the parity).
   */
-case class MinHashSignatureMod(child: Expression, numPerm: Int, prime: Long)
-    extends UnaryExpression {
-
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def nullable: Boolean = child.nullable
-
-  @transient private lazy val (pa, pb) =
-    NativeExpressions.minhashPerms(numPerm, prime)
-
-  override def nullSafeEval(input: Any): Any = {
-    val arr = input.asInstanceOf[ArrayData]
-    val n = arr.numElements()
-    val out = new Array[Long](numPerm)
-    var i = 0
-    while (i < numPerm) { out(i) = Long.MaxValue; i += 1 }
-    var j = 0
-    while (j < n) {
-      val raw = arr.getLong(j) % prime
-      val x = if (raw < 0) raw + prime else raw
-      var i2 = 0
-      while (i2 < numPerm) {
-        val h = (pa(i2) * x + pb(i2)) % prime
-        if (h < out(i2)) out(i2) = h
-        i2 += 1
-      }
-      j += 1
-    }
-    new GenericArrayData(out)
-  }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val paRef = ctx.addReferenceObj("pa", pa, "long[]")
-    val pbRef = ctx.addReferenceObj("pb", pb, "long[]")
-    nullSafeCodeGen(ctx, ev, c => {
-      val out = ctx.freshName("out")
-      val j = ctx.freshName("j")
-      val i = ctx.freshName("i")
-      val x = ctx.freshName("x")
-      val h = ctx.freshName("h")
-      s"""
-        long[] $out = new long[$numPerm];
-        java.util.Arrays.fill($out, Long.MAX_VALUE);
-        for (int $j = 0; $j < $c.numElements(); $j++) {
-          long $x = $c.getLong($j) % ${prime}L;
-          if ($x < 0) $x += ${prime}L;
-          for (int $i = 0; $i < $numPerm; $i++) {
-            long $h = ($paRef[$i] * $x + $pbRef[$i]) % ${prime}L;
-            if ($h < $out[$i]) $out[$i] = $h;
-          }
-        }
-        ${ev.value} = new org.apache.spark.sql.catalyst.util.GenericArrayData($out);
-      """
-    })
-  }
-
+case class MinHashSignatureMod(child: Expression, numPerm: Int)
+    extends MinHashKernel(reduce = true) {
   override protected def withNewChildInternal(newChild: Expression): Expression =
     copy(child = newChild)
 }
@@ -1883,61 +1963,14 @@ case class TextStats(child: Expression, stopwords: Map[String, Seq[String]],
     m
   }
 
-  private def nLangs: Int = langs.length
-
-  override def nullSafeEval(input: Any): Any = {
-    val arr = input.asInstanceOf[ArrayData]
-    val n = arr.numElements()
-    val out = new Array[Long](2 + nLangs)
-    var j = 0
-    while (j < n) {
-      val t = arr.getUTF8String(j)
-      if (t != null) { // null tokens: non-matches, as in the HOF reference
-        out(0) += t.numChars()
-        val m = maskMap.get(t)
-        if (m != null) {
-          out(1) += 1
-          val mi = m.intValue()
-          var b = 0
-          while (b < nLangs) {
-            if ((mi & (1 << b)) != 0) out(2 + b) += 1
-            b += 1
-          }
-        }
-      }
-      j += 1
-    }
-    new GenericArrayData(out)
-  }
+  override def nullSafeEval(input: Any): Any =
+    NativeExpressions.textStatsImpl(input.asInstanceOf[ArrayData], maskMap,
+      langs.length)
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
     val mapRef = ctx.addReferenceObj("maskMap", maskMap, "java.util.HashMap")
-    nullSafeCodeGen(ctx, ev, c => {
-      val out = ctx.freshName("out")
-      val j = ctx.freshName("j")
-      val t = ctx.freshName("t")
-      val m = ctx.freshName("m")
-      val mi = ctx.freshName("mi")
-      val b = ctx.freshName("b")
-      s"""
-        long[] $out = new long[${2 + nLangs}];
-        for (int $j = 0; $j < $c.numElements(); $j++) {
-          org.apache.spark.unsafe.types.UTF8String $t = $c.getUTF8String($j);
-          if ($t != null) {
-            $out[0] += $t.numChars();
-            Integer $m = (Integer) $mapRef.get($t);
-            if ($m != null) {
-              $out[1]++;
-              int $mi = $m.intValue();
-              for (int $b = 0; $b < $nLangs; $b++) {
-                if (($mi & (1 << $b)) != 0) $out[2 + $b]++;
-              }
-            }
-          }
-        }
-        ${ev.value} = new org.apache.spark.sql.catalyst.util.GenericArrayData($out);
-      """
-    })
+    nullSafeCodeGen(ctx, ev, c =>
+      s"""${ev.value} = graft.functions.NativeExpressions.textStatsImpl($c, $mapRef, ${langs.length});""")
   }
 
   override protected def withNewChildInternal(newChild: Expression): Expression =
@@ -1949,8 +1982,8 @@ case class TextStats(child: Expression, stopwords: Map[String, Seq[String]],
   * tables×bits×dim multiply-adds into one mega-expression (≈6k terms for
   * 16×6×64), which janino recompiles per enclosing codegen stage —
   * SECONDS of compile time per join stage that embeds it. Here the signs
-  * live in one broadcast double[] and the generated code is a constant
-  * 12-line triple loop. Bit-identical to per-table
+  * live in one broadcast double[] and the generated code is one call to
+  * [[NativeExpressions.hyperplaneSigsImpl]]. Bit-identical to per-table
   * Similarity.hyperplaneSig (shared sign function, same > 0 test, same
   * bit packing); element t of the output = table-t signature.
   */
@@ -1979,57 +2012,14 @@ case class HyperplaneSigs(child: Expression, dim: Int, bits: Int, tables: Int)
     a
   }
 
-  override def nullSafeEval(input: Any): Any = {
-    val arr = input.asInstanceOf[ArrayData]
-    val n = math.min(dim, arr.numElements())
-    val out = new Array[Long](tables)
-    var t = 0
-    while (t < tables) {
-      var sig = 0L
-      var i = 0
-      while (i < bits) {
-        var proj = 0.0
-        val base = (t * bits + i) * dim
-        var j = 0
-        while (j < n) { proj += arr.getDouble(j) * signs(base + j); j += 1 }
-        if (proj > 0) sig |= 1L << i
-        i += 1
-      }
-      out(t) = sig
-      t += 1
-    }
-    new GenericArrayData(out)
-  }
+  override def nullSafeEval(input: Any): Any =
+    NativeExpressions.hyperplaneSigsImpl(input.asInstanceOf[ArrayData], signs,
+      dim, bits, tables)
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
     val signsRef = ctx.addReferenceObj("signs", signs, "double[]")
-    nullSafeCodeGen(ctx, ev, c => {
-      val out = ctx.freshName("out")
-      val n = ctx.freshName("n")
-      val t = ctx.freshName("t")
-      val i = ctx.freshName("i")
-      val j = ctx.freshName("j")
-      val sig = ctx.freshName("sig")
-      val proj = ctx.freshName("proj")
-      val base = ctx.freshName("base")
-      s"""
-        int $n = Math.min($dim, $c.numElements());
-        long[] $out = new long[$tables];
-        for (int $t = 0; $t < $tables; $t++) {
-          long $sig = 0L;
-          for (int $i = 0; $i < $bits; $i++) {
-            double $proj = 0.0;
-            int $base = ($t * $bits + $i) * $dim;
-            for (int $j = 0; $j < $n; $j++) {
-              $proj += $c.getDouble($j) * $signsRef[$base + $j];
-            }
-            if ($proj > 0) $sig |= 1L << $i;
-          }
-          $out[$t] = $sig;
-        }
-        ${ev.value} = new org.apache.spark.sql.catalyst.util.GenericArrayData($out);
-      """
-    })
+    nullSafeCodeGen(ctx, ev, c =>
+      s"""${ev.value} = graft.functions.NativeExpressions.hyperplaneSigsImpl($c, $signsRef, $dim, $bits, $tables);""")
   }
 
   override protected def withNewChildInternal(newChild: Expression): Expression =
@@ -2063,13 +2053,6 @@ case class NearestCentroids(child: Expression, centroids: Array[Double],
     copy(child = newChild)
 }
 
-/** Winnowing-style rolling-hash fingerprint (SURVEY scale layer: document
-  * fingerprinting, rolling hash): the unsigned-minimum Rabin-Karp hash
-  * over every `window`-byte window of the UTF-8 text. Equal fingerprints
-  * mark documents sharing their rarest window — a cheap pre-cluster key
-  * that, unlike the shingle fingerprint, is insensitive to tokenization
-  * and catches byte-level near-dups. One pass, O(1) state, codegen'd.
-  */
 /** Per-position rolling gram hashes — the pass-1 kernel of
   * [[graft.scale.Dedup.exactDuplicateSpans]]: one 64-bit wrapping
   * polynomial hash per length-`gramLen` CODE-POINT window of the text,
@@ -2339,6 +2322,13 @@ case class NbBucketArgmax(child: Expression, n: Int, buckets: Int,
     copy(child = newChild)
 }
 
+/** Winnowing-style rolling-hash fingerprint (SURVEY scale layer: document
+  * fingerprinting, rolling hash): the unsigned-minimum Rabin-Karp hash
+  * over every `window`-byte window of the UTF-8 text. Equal fingerprints
+  * mark documents sharing their rarest window — a cheap pre-cluster key
+  * that, unlike the shingle fingerprint, is insensitive to tokenization
+  * and catches byte-level near-dups. One pass, O(1) state, codegen'd.
+  */
 case class RollingHashMin(child: Expression, window: Int)
     extends UnaryExpression {
 
@@ -2357,11 +2347,6 @@ case class RollingHashMin(child: Expression, window: Int)
     copy(child = newChild)
 }
 
-/** Fused cosine similarity over two numeric arrays (float or double
-  * elements), computed in double with the same left-to-right accumulation
-  * order as the aggregate/zip_with formulation. Either input null → null;
-  * zero-norm → 0.0 (matching Similarity.cosine's guard).
-  */
 /** |A ∩ B| of two SORTED-ascending array<long> columns by a single
   * allocation-free merge pass — the verify kernel for exact-Jaccard pair
   * joins ([[graft.scale.Dedup.ngramJaccardPairs]]), where the generic
@@ -2377,91 +2362,41 @@ case class SortedLongOverlap(left: Expression, right: Expression)
 
   override def dataType: DataType = LongType
 
-  override def nullSafeEval(l: Any, r: Any): Any = {
-    val a = l.asInstanceOf[ArrayData]
-    val b = r.asInstanceOf[ArrayData]
-    val na = a.numElements(); val nb = b.numElements()
-    var i = 0; var j = 0; var o = 0L
-    while (i < na && j < nb) {
-      val x = a.getLong(i); val y = b.getLong(j)
-      if (x == y) { o += 1; i += 1; j += 1; while (i < na && a.getLong(i) == x) i += 1; while (j < nb && b.getLong(j) == y) j += 1 }
-      else if (x < y) i += 1
-      else j += 1
-    }
-    o
-  }
+  override def nullSafeEval(l: Any, r: Any): Any =
+    NativeExpressions.sortedLongOverlapImpl(
+      l.asInstanceOf[ArrayData], r.asInstanceOf[ArrayData])
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (a, b) => {
-      val i = ctx.freshName("i"); val j = ctx.freshName("j")
-      val na = ctx.freshName("na"); val nb = ctx.freshName("nb")
-      val x = ctx.freshName("x"); val y = ctx.freshName("y")
-      val o = ctx.freshName("o")
-      s"""
-        int $na = $a.numElements(), $nb = $b.numElements();
-        int $i = 0, $j = 0; long $o = 0L;
-        while ($i < $na && $j < $nb) {
-          long $x = $a.getLong($i); long $y = $b.getLong($j);
-          if ($x == $y) {
-            $o++; $i++; $j++;
-            while ($i < $na && $a.getLong($i) == $x) $i++;
-            while ($j < $nb && $b.getLong($j) == $y) $j++;
-          } else if ($x < $y) { $i++; } else { $j++; }
-        }
-        ${ev.value} = $o;
-      """
-    })
+    nullSafeCodeGen(ctx, ev, (a, b) =>
+      s"""${ev.value} = graft.functions.NativeExpressions.sortedLongOverlapImpl($a, $b);""")
 
   override protected def withNewChildrenInternal(newLeft: Expression,
       newRight: Expression): Expression = copy(left = newLeft, right = newRight)
 }
 
+/** Fused cosine similarity over two numeric arrays (float or double
+  * elements), computed in double with the same left-to-right accumulation
+  * order as the aggregate/zip_with formulation. Either input null → null;
+  * zero-norm → 0.0 (matching Similarity.cosine's guard).
+  */
 case class CosineSimilarity(left: Expression, right: Expression)
     extends BinaryExpression {
 
   override def dataType: DataType = DoubleType
 
+  @transient private lazy val leftFloat = isFloat(left)
+  @transient private lazy val rightFloat = isFloat(right)
+
   private def isFloat(e: Expression): Boolean =
     e.dataType.asInstanceOf[ArrayType].elementType == FloatType
 
-  override def nullSafeEval(l: Any, r: Any): Any = {
-    val a = l.asInstanceOf[ArrayData]
-    val b = r.asInstanceOf[ArrayData]
-    val n = math.min(a.numElements(), b.numElements())
-    val lf = isFloat(left); val rf = isFloat(right)
-    var dot = 0.0; var na = 0.0; var nb = 0.0
-    var i = 0
-    while (i < n) {
-      val x = if (lf) a.getFloat(i).toDouble else a.getDouble(i)
-      val y = if (rf) b.getFloat(i).toDouble else b.getDouble(i)
-      dot += x * y; na += x * x; nb += y * y
-      i += 1
-    }
-    val denom = math.sqrt(na) * math.sqrt(nb)
-    if (math.sqrt(na) > 0 && math.sqrt(nb) > 0) dot / denom else 0.0
-  }
+  override def nullSafeEval(l: Any, r: Any): Any =
+    NativeExpressions.cosineImpl(l.asInstanceOf[ArrayData],
+      r.asInstanceOf[ArrayData], leftFloat, rightFloat)
 
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val getL = if (isFloat(left)) "getFloat" else "getDouble"
-    val getR = if (isFloat(right)) "getFloat" else "getDouble"
-    nullSafeCodeGen(ctx, ev, (a, b) => {
-      val i = ctx.freshName("i"); val n = ctx.freshName("n")
-      val dot = ctx.freshName("dot"); val na = ctx.freshName("na")
-      val nb = ctx.freshName("nb"); val x = ctx.freshName("x")
-      val y = ctx.freshName("y")
-      s"""
-        int $n = Math.min($a.numElements(), $b.numElements());
-        double $dot = 0.0, $na = 0.0, $nb = 0.0;
-        for (int $i = 0; $i < $n; $i++) {
-          double $x = (double) $a.$getL($i);
-          double $y = (double) $b.$getR($i);
-          $dot += $x * $y; $na += $x * $x; $nb += $y * $y;
-        }
-        ${ev.value} = (Math.sqrt($na) > 0 && Math.sqrt($nb) > 0)
-          ? $dot / (Math.sqrt($na) * Math.sqrt($nb)) : 0.0;
-      """
-    })
-  }
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+    nullSafeCodeGen(ctx, ev, (a, b) =>
+      s"""${ev.value} = graft.functions.NativeExpressions.cosineImpl($a, $b, $leftFloat, $rightFloat);""")
 
   override protected def withNewChildrenInternal(newLeft: Expression,
       newRight: Expression): Expression = copy(left = newLeft, right = newRight)
@@ -2521,35 +2456,12 @@ case class PortableTokenHashes(child: Expression) extends UnaryExpression {
   override def dataType: DataType = ArrayType(LongType, containsNull = false)
   override def nullable: Boolean = child.nullable
 
-  override def nullSafeEval(input: Any): Any = {
-    val arr = input.asInstanceOf[ArrayData]
-    val n = arr.numElements()
-    val out = new Array[Long](n)
-    var i = 0
-    while (i < n) {
-      val t = arr.getUTF8String(i)
-      out(i) = NativeExpressions.portableHash62(
-        if (t == null) org.apache.spark.unsafe.types.UTF8String.EMPTY_UTF8 else t)
-      i += 1
-    }
-    new GenericArrayData(out)
-  }
+  override def nullSafeEval(input: Any): Any =
+    NativeExpressions.portableTokenHashesImpl(input.asInstanceOf[ArrayData])
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c => {
-      val out = ctx.freshName("out")
-      val i = ctx.freshName("i")
-      val t = ctx.freshName("t")
-      s"""
-        long[] $out = new long[$c.numElements()];
-        for (int $i = 0; $i < $c.numElements(); $i++) {
-          org.apache.spark.unsafe.types.UTF8String $t = $c.getUTF8String($i);
-          $out[$i] = graft.functions.NativeExpressions.portableHash62(
-            $t == null ? org.apache.spark.unsafe.types.UTF8String.EMPTY_UTF8 : $t);
-        }
-        ${ev.value} = new org.apache.spark.sql.catalyst.util.GenericArrayData($out);
-      """
-    })
+    nullSafeCodeGen(ctx, ev, c =>
+      s"""${ev.value} = graft.functions.NativeExpressions.portableTokenHashesImpl($c);""")
 
   override protected def withNewChildInternal(newChild: Expression): Expression =
     copy(child = newChild)
@@ -3001,15 +2913,6 @@ case class PortableRollingMin(child: Expression, window: Int)
     copy(child = newChild)
 }
 
-/** 64-bit SimHash over pre-hashed tokens (array<long>): per-bit ±1 vote of
-  * each token hash's bit, positive vote → bit set. Bit-identical to the HOF
-  * reference `Dedup.simhash` (which votes with `shiftright(h, i) & 1` —
-  * arithmetic vs logical shift is irrelevant under `& 1`), but hashes each
-  * token ONCE and runs 64 bit-tests in a tight loop instead of re-evaluating
-  * `xxhash64(token)` inside a 64-element `transform` lambda (64× the hashing,
-  * plus a 64-long allocation per token, outside whole-stage codegen).
-  * Ties (vote == 0, even token counts) leave the bit clear — same as the HOF.
-  */
 /** Hashed-bag linear scoring — the fastText-style architecture every
   * large-corpus quality/language filter uses (CCNet, RedPajama, Dolma):
   * each pre-hashed token indexes a weight bucket (`(h mod B + B) mod B`,
@@ -3028,41 +2931,15 @@ case class BucketWeightSum(child: Expression,
   override def dataType: DataType = DoubleType
   override def nullable: Boolean = child.nullable
 
-  override def nullSafeEval(input: Any): Any = {
-    val arr = input.asInstanceOf[ArrayData]
-    val w = weights.value
-    val b = w.length
-    var acc = 0.0
-    var i = 0
-    val n = arr.numElements()
-    while (i < n) {
-      val idx = ((arr.getLong(i) % b) + b) % b
-      acc += w(idx.toInt)
-      i += 1
-    }
-    acc
-  }
+  override def nullSafeEval(input: Any): Any =
+    NativeExpressions.bucketWeightSumImpl(input.asInstanceOf[ArrayData],
+      weights.value)
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
     val ref = ctx.addReferenceObj("weightsBc", weights,
       classOf[org.apache.spark.broadcast.Broadcast[_]].getName)
-    nullSafeCodeGen(ctx, ev, c => {
-      val w = ctx.freshName("w")
-      val b = ctx.freshName("b")
-      val acc = ctx.freshName("acc")
-      val i = ctx.freshName("i")
-      val idx = ctx.freshName("idx")
-      s"""
-        double[] $w = (double[]) $ref.value();
-        long $b = $w.length;
-        double $acc = 0.0;
-        for (int $i = 0; $i < $c.numElements(); $i++) {
-          long $idx = (($c.getLong($i) % $b) + $b) % $b;
-          $acc += $w[(int) $idx];
-        }
-        ${ev.value} = $acc;
-      """
-    })
+    nullSafeCodeGen(ctx, ev, c =>
+      s"""${ev.value} = graft.functions.NativeExpressions.bucketWeightSumImpl($c, (double[]) $ref.value());""")
   }
 
   override protected def withNewChildInternal(newChild: Expression): Expression =
@@ -3146,53 +3023,26 @@ case class BloomMightContainLong(child: Expression,
     copy(child = newChild)
 }
 
+/** 64-bit SimHash over pre-hashed tokens (array<long>): per-bit ±1 vote of
+  * each token hash's bit, positive vote → bit set. Bit-identical to the HOF
+  * reference `Dedup.simhash` (which votes with `shiftright(h, i) & 1` —
+  * arithmetic vs logical shift is irrelevant under `& 1`), but hashes each
+  * token ONCE and runs 64 bit-tests in a tight loop instead of re-evaluating
+  * `xxhash64(token)` inside a 64-element `transform` lambda (64× the hashing,
+  * plus a 64-long allocation per token, outside whole-stage codegen).
+  * Ties (vote == 0, even token counts) leave the bit clear — same as the HOF.
+  */
 case class SimHash64(child: Expression) extends UnaryExpression {
 
   override def dataType: DataType = LongType
   override def nullable: Boolean = child.nullable
 
-  override def nullSafeEval(input: Any): Any = {
-    val arr = input.asInstanceOf[ArrayData]
-    val n = arr.numElements()
-    val votes = new Array[Int](64)
-    var j = 0
-    while (j < n) {
-      val h = arr.getLong(j)
-      var i = 0
-      while (i < 64) {
-        if (((h >>> i) & 1L) == 1L) votes(i) += 1 else votes(i) -= 1
-        i += 1
-      }
-      j += 1
-    }
-    var out = 0L
-    var i = 0
-    while (i < 64) { if (votes(i) > 0) out |= (1L << i); i += 1 }
-    out
-  }
+  override def nullSafeEval(input: Any): Any =
+    NativeExpressions.simhash64Impl(input.asInstanceOf[ArrayData])
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c => {
-      val votes = ctx.freshName("votes")
-      val j = ctx.freshName("j")
-      val i = ctx.freshName("i")
-      val h = ctx.freshName("h")
-      val out = ctx.freshName("out")
-      s"""
-        int[] $votes = new int[64];
-        for (int $j = 0; $j < $c.numElements(); $j++) {
-          long $h = $c.getLong($j);
-          for (int $i = 0; $i < 64; $i++) {
-            if ((($h >>> $i) & 1L) == 1L) $votes[$i]++; else $votes[$i]--;
-          }
-        }
-        long $out = 0L;
-        for (int $i = 0; $i < 64; $i++) {
-          if ($votes[$i] > 0) $out |= (1L << $i);
-        }
-        ${ev.value} = $out;
-      """
-    })
+    nullSafeCodeGen(ctx, ev, c =>
+      s"""${ev.value} = graft.functions.NativeExpressions.simhash64Impl($c);""")
 
   override protected def withNewChildInternal(newChild: Expression): Expression =
     copy(child = newChild)

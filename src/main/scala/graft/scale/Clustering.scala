@@ -16,9 +16,9 @@ import org.apache.spark.sql.functions._
   *     shuffle of at most `parts × k × dim` (cluster, dim)-sum rows — the
   *     classic Spark Lloyd shape. Nothing proportional to the corpus ever
   *     reaches the driver; only the k×dim centroid matrix does.
-  *   - the corpus projection is persisted once and reused across
-  *     iterations (caller unpersists via the returned frame's lineage
-  *     being consumed; Verify/Bench clear the cache between queries).
+  *   - the corpus projection is persisted once, reused across
+  *     iterations and unpersisted before training returns; the final
+  *     assignment is one more narrow pass over the corpus.
   *
   * Determinism (oracle-replayable on any engine):
   *   - init = the vectors of the k smallest ids (no RNG);
@@ -57,21 +57,19 @@ object Clustering {
       .otherwise(lit(null).cast("int"))
   }
 
-  /** Train k centroids for `iters` Lloyd iterations; returns the final
-    * per-point assignment (idCol, cluster) using the centroids of the LAST
+  /** Train k centroids for `iters` Lloyd iterations ([[lloydTrain]]);
+    * returns the final per-point assignment (idCol, cluster), one narrow
+    * pass over the corpus with the centroids of the LAST
     * completed mean-update (i.e. `iters` assignment passes, `iters - 1`
     * mean updates — the final assignment is what downstream curation
     * consumes). An empty cluster keeps its previous centroid.
     */
   def lloydAssignments(corpus: DataFrame, idCol: String, vecCol: String,
       k: Int, iters: Int, roundDp: Int = 6): DataFrame = {
-    require(k > 0 && iters > 0, "k and iters must be positive")
-    val e = graft.core.Par.ensure(corpus)
-      .select(col(idCol).as("__id"),
-        transform(col(vecCol), x => x.cast("double")).as("__v"))
-      .persist()
-    val cents = lloydCentroids(e, k, iters, roundDp)
-    e.select(col("__id").as(idCol), assignExpr(col("__v"), cents).as("cluster"))
+    val cents = lloydTrain(corpus, idCol, vecCol, k, iters, roundDp)
+    corpus.select(col(idCol),
+      assignExpr(transform(col(vecCol), x => x.cast("double")), cents)
+        .as("cluster"))
   }
 
   /** Train and RETURN the k×dim centroid matrix (the model artifact) —
@@ -94,7 +92,7 @@ object Clustering {
     * array<double>) frame: deterministic lowest-id seed, `iters − 1`
     * assignment + rounded-mean updates, returns the final k×dim centroid
     * matrix (the only data that lands on the driver). Shared by
-    * [[lloydAssignments]] and the per-subspace codebook training in
+    * [[lloydTrain]] and the per-subspace codebook training in
     * [[Pq]].
     */
   private[scale] def lloydCentroids(e: DataFrame, k: Int, iters: Int,

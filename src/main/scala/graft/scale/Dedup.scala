@@ -30,7 +30,7 @@ object Dedup {
     df.withColumn("__rn", row_number().over(w)).filter(col("__rn") === 1).drop("__rn")
   }
 
-  private val Prime = 2147483647L // 2^31 - 1, Mersenne — fast mod, no overflow for a*x+b with x < 2^31
+  import graft.functions.NativeExpressions.Prime
 
   /** Cap on the hot-shingle set [[ngramJaccardPairs]] collects to the
     * driver (4M entries ≈ 6 MB Bloom at fpp 0.01 — broadcastable). df ≥
@@ -48,22 +48,6 @@ object Dedup {
     * this only bounds df_post(g) for shingles that can sit in a prefix.
     */
   private val HotDemoteCutoff = 128
-
-  /** Deterministic affine hash family seeds (a_i, b_i), i in [0, numPerm). */
-  private def perms(numPerm: Int): Seq[(Long, Long)] =
-    (0 until numPerm).map { i =>
-      // splitmix64-style spread of the index — fixed, reproducible
-      val a = 1L + 2654435761L * (i + 1) % (Prime - 1)
-      val b = 2246822519L * (i + 1) % Prime
-      (a % (Prime - 1) + 1, b)
-    }
-
-  /** Shingle strings → hashes folded into [0, 2^31) — materialize this ONCE
-    * (as a real column) before fanning out to the perm family, otherwise
-    * every perm re-hashes the strings (64× the work).
-    */
-  def shingleHashes(shingles: Column): Column =
-    transform(shingles, s => pmod(xxhash64(s), lit(Prime)))
 
   /** rotate-left by 5 — bitwise only, safe under ANSI arithmetic. */
   private def rotl5(c: Column): Column =
@@ -88,11 +72,13 @@ object Dedup {
   /** MinHash signature (array<bigint> of length numPerm) over pre-hashed
     * shingles. h_i(x) = (a_i * x + b_i) mod p with x < 2^31: keeps a_i * x
     * within Long range (exact math, no wrap), so signatures are identical
-    * on any engine.
+    * on any engine. The (a_i, b_i) family is the native kernels'
+    * ([[graft.functions.NativeExpressions.minhashPerms]]).
     */
   def minhashSignature(hashedShingles: Column, numPerm: Int = 64): Column = {
-    val sigs = perms(numPerm).map { case (a, b) =>
-      array_min(transform(hashedShingles, x => pmod(x * a + b, lit(Prime))))
+    val (as, bs) = graft.functions.NativeExpressions.minhashPerms(numPerm)
+    val sigs = as.indices.map { i =>
+      array_min(transform(hashedShingles, x => pmod(x * as(i) + bs(i), lit(Prime))))
     }
     array(sigs: _*)
   }
@@ -191,7 +177,7 @@ object Dedup {
         split(col(textCol), "\\s+"), shingleSize).as("sh"))
     .withColumn("sig",
       graft.functions.NativeExpressions.minhash_signature_mod(
-        col("sh"), numPerm, Prime))
+        col("sh"), numPerm))
 
   /** Cross-corpus near-duplicate pairs: every (id_l, id_r) with
     * J(shingles_l, shingles_r) ≥ threshold where the sides come from TWO

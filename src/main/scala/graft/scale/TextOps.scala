@@ -153,14 +153,6 @@ object TextOps {
     }.otherwise("und")
   }
 
-  /** Word n-gram shingles (1-based element_at indexing, portable order). */
-  def shingles(toks: Column, n: Int): Column =
-    array_distinct(
-      when(size(toks) >= n,
-        transform(sequence(lit(1), size(toks) - (n - 1)),
-          i => concat_ws(" ", (0 until n).map(j => element_at(toks, i + j)): _*)))
-        .otherwise(array(concat_ws(" ", toks))))
-
   /** Content-defined fingerprint: min of shingle hashes (winnowing-style
     * bottom sketch, k=1). Equal fingerprints => likely near-duplicate heads;
     * used as a cheap pre-cluster key before pairwise verification.
@@ -182,12 +174,6 @@ object TextOps {
     */
   def rollingFingerprint(text: Column, window: Int = 32): Column =
     graft.functions.NativeExpressions.rolling_hash_min(text, window)
-
-  /** String-shingle fingerprint (historical formulation; kept only as the
-    * slow reference for tests — concatenates every shingle before hashing).
-    */
-  def fingerprintStringShingles(text: Column, n: Int = 3): Column =
-    array_min(transform(shingles(tokens(text), n), s => xxhash64(s)))
 
   /** Exact top-k tokens WITHOUT a corpus-wide distinct-token aggregation —
     * the scale path for q23's `groupBy(token).count()`. A plain full

@@ -25,7 +25,7 @@ class ExtensionsSpec extends SparkSpec {
         new org.apache.spark.sql.catalyst.util.GenericArrayData(
           Array(5L, 17L, 99999L)),
         org.apache.spark.sql.types.ArrayType(
-          org.apache.spark.sql.types.LongType)), 8, 2147483647L)
+          org.apache.spark.sql.types.LongType)), 8)
       .eval(null)
       .asInstanceOf[org.apache.spark.sql.catalyst.util.GenericArrayData]
       .toLongArray()

@@ -3,7 +3,14 @@ package graft.functions
 import graft.SparkSpec
 import graft.core.{Tables => T}
 import graft.scale.{Dedup, Similarity, TextOps}
+import org.apache.spark.sql.catalyst.{CatalystTypeConverters, InternalRow}
+import org.apache.spark.sql.catalyst.expressions.{BoundReference, Expression,
+  InterpretedUnsafeProjection, UnsafeProjection}
+import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenFallback,
+  GenerateUnsafeProjection}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, FloatType,
+  LongType, StringType}
 
 /** The native codegen expressions must be bit-identical to their
   * expression-combinator reference formulations — verified over real data.
@@ -11,6 +18,48 @@ import org.apache.spark.sql.functions._
 class NativeExpressionsSpec extends SparkSpec {
 
   private val sf = "/root/testdata/sf0.001"
+
+  private val longs = ArrayType(LongType, containsNull = true)
+
+  /** Edge-case array<long> inputs: null, empty, a null element, negatives,
+    * duplicates and the Long extremes.
+    */
+  private val longInputs: Seq[Seq[Any]] = Seq(null, Seq.empty[Long],
+    Seq(-1L), Seq(7L, -7L), Seq(1L, 2L, 3L, Long.MinValue), Seq(1L, null, 3L),
+    Seq(5L, 17L, 99999L), Seq(3L, 3L, 3L), Seq(Long.MinValue, -2147483648L,
+      -1L, 0L, 2147483646L, 2147483647L, Long.MaxValue),
+    Seq(-9L, -9L, 4L, 1L << 40, -(1L << 40)))
+
+  /** Runs `expr`'s GENERATED code over `rows` (one value per
+    * [[BoundReference]] ordinal, as UnsafeRows like a real scan's) and
+    * checks every result byte-for-byte against `expr.eval`.
+    * `GenerateUnsafeProjection.generate` throws on a compile error instead
+    * of falling back to interpretation. A DataFrame over `Seq(...).toDF`
+    * would not do: the optimizer folds it into a LocalRelation by
+    * interpreted eval before any code is generated.
+    */
+  private def assertCodegenMatchesEval(expr: Expression,
+      rows: Seq[Seq[Any]]): Unit = {
+    assert(!expr.isInstanceOf[CodegenFallback],
+      s"${expr.prettyName} has no generated code")
+    val inputTypes: Array[DataType] = expr.collect { case b: BoundReference => b }
+      .sortBy(_.ordinal).map(_.dataType).toArray
+    val toUnsafe = UnsafeProjection.create(inputTypes)
+    val generated = GenerateUnsafeProjection.generate(Seq(expr),
+      subexpressionEliminationEnabled = false)
+    val evaluated = InterpretedUnsafeProjection.createProjection(
+      Seq(BoundReference(0, expr.dataType, nullable = true)))
+    rows.foreach { values =>
+      val row = toUnsafe(InternalRow.fromSeq(
+        values.map(CatalystTypeConverters.convertToCatalyst))).copy()
+      val viaEval = expr.eval(row)
+      val got = generated(row).copy()
+      val want = evaluated(InternalRow(viaEval))
+      def show(v: Any) = CatalystTypeConverters.convertToScala(v, expr.dataType)
+      assert(got == want, s"${expr.prettyName} on $values: generated " +
+        s"${show(got.get(0, expr.dataType))}, eval ${show(viaEval)}")
+    }
+  }
 
   test("whitespace_tokens == filter(split(text, \\s+), non-empty) on real and crafted text") {
     import spark.implicits._
@@ -75,19 +124,8 @@ class NativeExpressionsSpec extends SparkSpec {
   }
 
   test("simhash codegen and interpreted paths agree; empty/odd-count inputs") {
-    import org.apache.spark.sql.catalyst.expressions.Literal
-    import org.apache.spark.sql.catalyst.util.GenericArrayData
-    import spark.implicits._
-    for (input <- Seq(Seq.empty[Long], Seq(-1L), Seq(7L, -7L), Seq(1L, 2L, 3L, Long.MinValue))) {
-      val expr = SimHash64(Literal.create(new GenericArrayData(input.toArray),
-        org.apache.spark.sql.types.ArrayType(
-          org.apache.spark.sql.types.LongType)))
-      val interp = expr.eval(null).asInstanceOf[Long]
-      val viaDf = Seq(input).toDF("th")
-        .select(NativeExpressions.simhash64(col("th")).as("h"))
-        .collect().head.getLong(0)
-      assert(interp == viaDf, s"mismatch on $input")
-    }
+    assertCodegenMatchesEval(SimHash64(BoundReference(0, longs, true)),
+      longInputs.map(Seq(_)))
   }
 
   test("hashed fingerprint == min over distinct hashed shingles (multiset min)") {
@@ -391,32 +429,66 @@ class NativeExpressionsSpec extends SparkSpec {
     assert(one(Seq(1L, 3L), Seq(2L, 4L)) == 0L)
     assert(one(Seq(Long.MinValue, 0L, Long.MaxValue),
       Seq(Long.MinValue, Long.MaxValue)) == 2L)
-    // interpreted path agrees with the DataFrame (codegen) path
-    import org.apache.spark.sql.catalyst.expressions.Literal
-    import org.apache.spark.sql.catalyst.util.GenericArrayData
-    val at = org.apache.spark.sql.types.ArrayType(
-      org.apache.spark.sql.types.LongType)
-    val interp = SortedLongOverlap(
-      Literal.create(new GenericArrayData(Array(1L, 3L, 7L)), at),
-      Literal.create(new GenericArrayData(Array(3L, 7L, 9L)), at)).eval(null)
-    assert(interp == 2L)
+    val sorted = longInputs.map(a => if (a == null) null else
+      a.map(x => if (x == null) 0L else x.asInstanceOf[Long]).sorted)
+    assertCodegenMatchesEval(
+      SortedLongOverlap(BoundReference(0, longs, true),
+        BoundReference(1, longs, true)),
+      for (a <- sorted; b <- sorted) yield Seq(a, b))
   }
 
   test("codegen and interpreted paths agree") {
-    // force interpreted eval by constructing rows and calling eval directly
-    import org.apache.spark.sql.catalyst.expressions.Literal
-    import org.apache.spark.sql.catalyst.util.GenericArrayData
-    val xs = new GenericArrayData(Array(5L, 17L, 99999L))
-    val expr = MinHashSignature(Literal.create(xs,
-      org.apache.spark.sql.types.ArrayType(
-        org.apache.spark.sql.types.LongType)), 8, 2147483647L)
-    val interp = expr.eval(null).asInstanceOf[GenericArrayData].toLongArray()
-    // same via a DataFrame (codegen path)
-    import spark.implicits._
-    val viaDf = Seq(Seq(5L, 17L, 99999L)).toDF("xs")
-      .select(NativeExpressions.minhash_signature(col("xs"), 8).as("sig"))
-      .collect().head.getSeq[Long](0)
-    assert(interp.toSeq == viaDf)
+    val xs = BoundReference(0, longs, true)
+    val unary = longInputs.map(Seq(_))
+    assertCodegenMatchesEval(MinHashSignature(xs, 8), unary)
+    assertCodegenMatchesEval(MinHashSignatureMod(xs, 8), unary)
+    // MinHashSignature takes each x as given, also outside [0, Prime)
+    val (pa, pb) = NativeExpressions.minhashPerms(8)
+    val raw = Seq(-1L, Long.MinValue, Long.MaxValue, 3L * Int.MaxValue)
+    val sig = MinHashSignature(xs, 8).eval(InternalRow(
+      CatalystTypeConverters.convertToCatalyst(raw)))
+    assert(CatalystTypeConverters.convertToScala(sig, longs) ==
+      pa.indices.map(i =>
+        raw.map(x => (pa(i) * x + pb(i)) % NativeExpressions.Prime).min))
+    val weights = spark.sparkContext.broadcast(Array(0.5, -1.25, 3.0, 1e-3, 7.0))
+    assertCodegenMatchesEval(BucketWeightSum(xs, weights), unary)
+    for (n <- 1 to 3) {
+      assertCodegenMatchesEval(PortableShingleMin(xs, n), unary)
+      assertCodegenMatchesEval(PortableShingles(xs, n), unary)
+      assertCodegenMatchesEval(PortableDistinctShingles(xs, n), unary)
+    }
+
+    val toks = BoundReference(0, ArrayType(StringType, containsNull = true), true)
+    val tokInputs = Seq(null, Seq.empty[String], Seq(null),
+      Seq("the", "de", "xyz", "THE", "\u00e9t\u00e9"),
+      Seq("", "a", null, "\ud83d\ude00", "und", "the")).map(Seq(_))
+    assertCodegenMatchesEval(TextStats(toks, TextOps.Stopwords, TextOps.Langs),
+      tokInputs)
+    assertCodegenMatchesEval(PortableTokenHashes(toks), tokInputs)
+
+    val doubles = ArrayType(DoubleType, containsNull = true)
+    val floats = ArrayType(FloatType, containsNull = true)
+    val vecInputs: Seq[Any] = Seq(null, Seq.empty[Double], Seq(1.0),
+      Seq(1.0, -1.0, 0.5, -0.25), Seq(0.0, -0.0, 0.0, 0.0),
+      Seq(1.0, null, -2.0, 3.0), Seq(3.0, -1.0, 2.0, 0.5, 9.0, -9.0),
+      Seq(Double.MaxValue, -1e-300, Double.NaN, -4.0))
+    assertCodegenMatchesEval(
+      HyperplaneSigs(BoundReference(0, doubles, true), 4, 6, 3),
+      vecInputs.map(Seq(_)))
+    def asFloats(v: Any): Any = v match {
+      case null => null
+      case xs: Seq[_] => xs.map {
+        case null => null
+        case d: Double => d.toFloat
+      }
+    }
+    for ((lt, rt) <- Seq(doubles -> doubles, floats -> doubles,
+        doubles -> floats, floats -> floats)) {
+      def as(t: ArrayType, v: Any): Any = if (t == floats) asFloats(v) else v
+      assertCodegenMatchesEval(
+        CosineSimilarity(BoundReference(0, lt, true), BoundReference(1, rt, true)),
+        for (a <- vecInputs; b <- vecInputs) yield Seq(as(lt, a), as(rt, b)))
+    }
   }
 
   /** Independent reference BPE-apply (GPT-2 semantics), written as a

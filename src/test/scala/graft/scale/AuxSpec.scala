@@ -73,6 +73,15 @@ class AuxSpec extends SparkSpec {
     assert(got === want)
   }
 
+  test("lloydAssignments leaves no persisted RDDs behind") {
+    val pts = vecs(0L -> Seq(0f, 0f), 1L -> Seq(0.1f, 0f),
+      2L -> Seq(10f, 0f), 3L -> Seq(10.1f, 0f))
+    val before = spark.sparkContext.getPersistentRDDs.keySet.toSet
+    Clustering.lloydAssignments(pts, "id", "v", k = 2, iters = 2).count()
+    val leaked = spark.sparkContext.getPersistentRDDs.keySet.toSet -- before
+    assert(leaked.isEmpty, s"leaked persisted RDD ids: $leaked")
+  }
+
   // ---- Retrieval.tfidfTopK ---------------------------------------------
 
   test("tfidf: scores, df sharing, and the (score desc, term) cut") {
