@@ -1,72 +1,66 @@
 package graft.plans
 
+import graft.operators.RangeJoin
 import org.apache.spark.sql.catalyst.expressions._
 import org.apache.spark.sql.catalyst.plans.Inner
 import org.apache.spark.sql.catalyst.plans.logical._
 import org.apache.spark.sql.catalyst.rules.Rule
+import org.apache.spark.sql.graftbridge.Bridge
 import org.apache.spark.sql.internal.SQLConf
 import org.apache.spark.sql.types.{IntegerType, LongType}
 
 /** Optimizer rule: rewrite an equi-keyless point-in-interval join into the
-  * bin-bucketed equi join (the [[graft.operators.RangeJoin]] plan shape),
-  * automatically.
+  * bin-bucketed equi join of [[graft.operators.RangeJoin]], automatically.
   *
   * A join whose only condition is `p >= lo AND p <= hi` (or the BETWEEN
   * sugar, which parses to exactly that) has no equi key, so Spark can only
   * plan BroadcastNestedLoopJoin — O(|L|·|R|) compares and a broadcast
-  * requirement. This rule manufactures the key: project `floor(p/w)` on
-  * the point side, explode `floor(lo/w)..floor(hi/w)` on the interval
-  * side, join on bin equality AND the original predicate, then project
-  * the bins away. Output rows and columns are exactly those of the
-  * original join (a point has one bin, so no duplicate matches; null
-  * bounds produce a null sequence → no generated rows, matching BETWEEN's
-  * null semantics; an inverted interval explodes to bins the original
-  * predicate then rejects).
+  * requirement. This rule manufactures the key with the operator's own
+  * bin expressions ([[graft.operators.RangeJoin.bin]] on the point side,
+  * [[graft.operators.RangeJoin.binRange]] exploded on the interval side),
+  * joins on bin equality AND the original predicate, then projects the
+  * bins away. Output rows and columns are exactly those of the original
+  * join (a point has one bin, so no duplicate matches; null bounds produce
+  * a null sequence → no generated rows, matching BETWEEN's null semantics;
+  * an inverted interval explodes to bins the original predicate then
+  * rejects).
   *
   * Scoped deliberately narrowly: inner join, condition is EXACTLY the two
   * range conjuncts over integral columns, point side from the left,
   * bounds from the right. Anything else is left untouched. After the
   * rewrite the join has an equality conjunct, so the rule cannot re-fire.
   *
-  * Config: `spark.graft.rangeJoin.enabled` (default true),
-  * `spark.graft.rangeJoin.binWidth` (default 3600000000 — one hour in
-  * microseconds; set it near the median interval length).
+  * Config: `spark.graft.rangeJoin.binWidth` (default 3600000000 — one hour
+  * in microseconds; set it near the median interval length).
   *
   * Injected by `GraftExtensions` (session build time) or
-  * `spark.experimental.extraOptimizations` (live session).
+  * `spark.experimental.extraOptimizations` (live session); a session that
+  * does not want the rewrite does not install the rule.
   */
 object RangeJoinRewrite extends Rule[LogicalPlan] {
 
-  private def enabled: Boolean = SQLConf.get
-    .getConfString("spark.graft.rangeJoin.enabled", "true").toBoolean
   private def binWidth: Long = SQLConf.get
     .getConfString("spark.graft.rangeJoin.binWidth", "3600000000").toLong
 
-  override def apply(plan: LogicalPlan): LogicalPlan = {
-    if (!enabled) plan
-    else plan.transformUp {
-      case j @ Join(left, right, Inner, Some(cond), hint) =>
-        matchRange(cond, left, right) match {
-          case Some((p, lo, hi)) =>
-            val w = binWidth
-            val binL = Alias(floorDiv(p, w), "__graft_bin_l")()
-            val lproj = Project(left.output :+ binL, left)
-            val binR = AttributeReference("__graft_bin_r", LongType,
-              nullable = false)()
-            // Sequence is TimeZoneAware: without an explicit zone it stays
-            // unresolved and the optimizer rejects the plan
-            val seq = new Sequence(floorDiv(lo, w), floorDiv(hi, w))
-              .withTimeZone(SQLConf.get.sessionLocalTimeZone)
-            val gen = Generate(
-              Explode(seq),
-              unrequiredChildIndex = Nil, outer = false, qualifier = None,
-              generatorOutput = Seq(binR), child = right)
-            val newCond = And(EqualTo(binL.toAttribute, binR), cond)
-            Project((left.output ++ right.output).map(a => a: NamedExpression),
-              Join(lproj, gen, Inner, Some(newCond), hint))
-          case None => j
-        }
-    }
+  override def apply(plan: LogicalPlan): LogicalPlan = plan.transformUp {
+    case j @ Join(left, right, Inner, Some(cond), hint) =>
+      matchRange(cond, left, right) match {
+        case Some((p, lo, hi)) =>
+          val w = binWidth
+          def bin(e: Expression) = RangeJoin.bin(Bridge.column(e), w)
+          val binL = Alias(Bridge.expression(bin(p)), "__graft_bin_l")()
+          val lproj = Project(left.output :+ binL, left)
+          val binR = AttributeReference("__graft_bin_r", LongType,
+            nullable = false)()
+          val gen = Generate(
+            Explode(Bridge.expression(RangeJoin.binRange(bin(lo), bin(hi)))),
+            unrequiredChildIndex = Nil, outer = false, qualifier = None,
+            generatorOutput = Seq(binR), child = right)
+          val newCond = And(EqualTo(binL.toAttribute, binR), cond)
+          Project((left.output ++ right.output).map(a => a: NamedExpression),
+            Join(lproj, gen, Inner, Some(newCond), hint))
+        case None => j
+      }
   }
 
   /** `p >= lo AND p <= hi` with p strictly from the left, lo/hi strictly
@@ -101,15 +95,5 @@ object RangeJoinRewrite extends Rule[LogicalPlan] {
         }
       case _ => None
     }
-  }
-
-  /** Exact floor division for integral expressions: subtract the
-    * non-negative pmod remainder, then integer division of the exact
-    * multiple (truncation == floor there, negatives included).
-    */
-  private def floorDiv(e: Expression, w: Long): Expression = {
-    val el = Cast(e, LongType)
-    val lit = Literal(w, LongType)
-    IntegralDivide(Subtract(el, Pmod(el, lit)), lit)
   }
 }

@@ -141,19 +141,33 @@ object Dedup {
       .select(col("id"), explode(bandKeys(col("sig"), bands, rowsPerBand)).as("bk"))
     val candidates = bucketPairs(banded, maxBucket)
     val sh = frozen.select(col("id"), col("sh"))
+    exactJaccardVerify(candidates, sh, sh, "a", "b", threshold)
+  }
+
+  /** The exact set-Jaccard verify every Jaccard pair generator ends in:
+    * joins the (id, sh) shingle arrays of `left` and `right` onto the
+    * (id_`l`, id_`r`) `candidates`, takes |A∩B| in one allocation-free
+    * sorted-merge pass ([[graft.functions.SortedLongOverlap]] — the
+    * arrays are sorted-distinct by the shingle-set contract) and
+    * |A∪B| = |A| + |B| − |A∩B|, and keeps the pairs at or above
+    * `threshold`. Returns (id_`l`, id_`r`, jaccard rounded to 6dp); an
+    * empty union scores 1.0.
+    */
+  private def exactJaccardVerify(candidates: DataFrame, left: DataFrame,
+      right: DataFrame, l: String, r: String, threshold: Double): DataFrame = {
+    def side(f: DataFrame, s: String) =
+      f.withColumnRenamed("id", s"id_$s").withColumnRenamed("sh", s"sh_$s")
     candidates
-      .join(sh.withColumnRenamed("id", "id_a").withColumnRenamed("sh", "sh_a"), "id_a")
-      .join(sh.withColumnRenamed("id", "id_b").withColumnRenamed("sh", "sh_b"), "id_b")
-      // exact set-Jaccard via one sorted-merge pass (arrays are
-      // sorted-distinct above): |A∪B| = |A| + |B| − o
+      .join(side(left, l), s"id_$l")
+      .join(side(right, r), s"id_$r")
       .withColumn("o", graft.functions.NativeExpressions
-        .sorted_long_overlap(col("sh_a"), col("sh_b")))
-      .withColumn("u", size(col("sh_a")).cast("long") +
-        size(col("sh_b")).cast("long") - col("o"))
+        .sorted_long_overlap(col(s"sh_$l"), col(s"sh_$r")))
+      .withColumn("u", size(col(s"sh_$l")).cast("long") +
+        size(col(s"sh_$r")).cast("long") - col("o"))
       .withColumn("jaccard",
         when(col("u") > 0, col("o").cast("double") / col("u")).otherwise(lit(1.0)))
       .filter(col("jaccard") >= threshold)
-      .select(col("id_a"), col("id_b"), round(col("jaccard"), 6).as("jaccard"))
+      .select(col(s"id_$l"), col(s"id_$r"), round(col("jaccard"), 6).as("jaccard"))
   }
 
   /** Shared MinHash kernel frame: (id, sh, sig) where `sh` is the
@@ -239,11 +253,26 @@ object Dedup {
       idCol: String, textCol: String,
       shingleSize: Int = 3, numPerm: Int = 64): DataFrame = {
     val newSigs = shingleSigFrame(batch, idCol, textCol, shingleSize, numPerm)
-    index.select(col("id"), col("sh"), col("sig"))
-      .join(newSigs.select(col("id").as("__bid")),
-        col("id") === col("__bid"), "left_anti")
-      .union(newSigs)
+    batchWins(index, newSigs, "id", newSigs)
   }
+
+  /** The batch-wins merge every incremental index maintenance path rests
+    * on (the q136 contract): drop the `index` rows whose `idCol` is among
+    * the first column of `ids`, then append `batch` (`index` is read in
+    * `batch`'s columns, so the append lines up). `ids` is the batch's
+    * document ids — usually `batch` itself; a per-posting table passes
+    * its documents, so a re-ingested document's stale rows all vanish,
+    * even for terms or shingles its new text no longer has. The anti-join
+    * ships 8-byte ids only; payloads ride untouched. Hence
+    * merge(build(A), B) ≡ build((A ∖ ids(B)) ∪ B) whenever a row depends
+    * on its own document alone.
+    */
+  private[scale] def batchWins(index: DataFrame, batch: DataFrame,
+      idCol: String, ids: DataFrame): DataFrame =
+    index.select(batch.columns.toIndexedSeq.map(col): _*)
+      .join(ids.select(col(ids.columns.head).as("__bid")),
+        col(idCol) === col("__bid"), "left_anti")
+      .union(batch)
 
   /** Incremental near-dup scoring of a batch against a PERSISTED corpus
     * index ([[minhashIndex]] schema): identical semantics and parameters
@@ -282,18 +311,9 @@ object Dedup {
       explode(bandKeys(col("sig"), bands, rowsPerBand)).as("bk"))
     val br = fr.select(col("id"),
       explode(bandKeys(col("sig"), bands, rowsPerBand)).as("bk"))
-    val candidates = bucketPairsAcross(bl, br, maxBucket)
-    candidates
-      .join(fl.select(col("id").as("id_l"), col("sh").as("sh_l")), "id_l")
-      .join(fr.select(col("id").as("id_r"), col("sh").as("sh_r")), "id_r")
-      .withColumn("o", graft.functions.NativeExpressions
-        .sorted_long_overlap(col("sh_l"), col("sh_r")))
-      .withColumn("u", size(col("sh_l")).cast("long") +
-        size(col("sh_r")).cast("long") - col("o"))
-      .withColumn("jaccard",
-        when(col("u") > 0, col("o").cast("double") / col("u")).otherwise(lit(1.0)))
-      .filter(col("jaccard") >= threshold)
-      .select(col("id_l"), col("id_r"), round(col("jaccard"), 6).as("jaccard"))
+    exactJaccardVerify(bucketPairsAcross(bl, br, maxBucket),
+      fl.select(col("id"), col("sh")), fr.select(col("id"), col("sh")),
+      "l", "r", threshold)
   }
 
   /** Distinct cross-side (id_l, id_r) pairs sharing a bucket key `bk`,
@@ -432,10 +452,7 @@ object Dedup {
   def jaccardIndexMerge(index: DataFrame, batch: DataFrame,
       idCol: String, textCol: String, shingleSize: Int = 3): DataFrame = {
     val newSh = shingleSetFrame(batch, idCol, textCol, shingleSize)
-    index.select(col("id"), col("sh"))
-      .join(newSh.select(col("id").as("__bid")),
-        col("id") === col("__bid"), "left_anti")
-      .union(newSh)
+    batchWins(index, newSh, "id", newSh)
   }
 
   /** Exact symmetric Jaccard pairs of a text batch against a persisted
@@ -495,19 +512,10 @@ object Dedup {
         min(col("n_l")).as("na"), min(col("n_r")).as("nb"))
       .filter(least(col("na") - shiftright(col("pp"), 31),
         col("nb") - col("pp").bitwiseAND(lit((1L << 31) - 1))) >= oMin)
-      .select(col("id_l"), col("id_r"), col("na"), col("nb"))
+      .select(col("id_l"), col("id_r"))
     // frozen for containmentCore's double-broadcast reason
-    sharedShuffle(candidates, col("id_l"), pinned = false)
-      .join(idx.select(col("id").as("id_l"), col("sh").as("sh_l")), "id_l")
-      .join(bat.select(col("id").as("id_r"), col("sh").as("sh_r")), "id_r")
-      .withColumn("o", graft.functions.NativeExpressions
-        .sorted_long_overlap(col("sh_l"), col("sh_r")))
-      .withColumn("jaccard",
-        when(col("na") + col("nb") - col("o") > 0,
-          col("o").cast("double") / (col("na") + col("nb") - col("o")))
-          .otherwise(lit(1.0)))
-      .filter(col("jaccard") >= threshold)
-      .select(col("id_l"), col("id_r"), round(col("jaccard"), 6).as("jaccard"))
+    exactJaccardVerify(sharedShuffle(candidates, col("id_l"), pinned = false),
+      idx, bat, "l", "r", threshold)
   }
 
   /** Directed containment of a text batch against a persisted
@@ -619,12 +627,11 @@ object Dedup {
   def containmentPostingStoreMerge(store: DataFrame, batch: DataFrame,
       idCol: String, textCol: String, shingleSize: Int,
       buckets: Int): DataFrame = {
-    val fresh = containmentPostingStore(
-      shingleSetFrame(batch, idCol, textCol, shingleSize), buckets)
-    store.select(col("id_b"), col("nb"), col("g"), col("bucket"))
-      .join(fresh.select(col("id_b").as("__bid")).distinct(),
-        col("id_b") === col("__bid"), "left_anti")
-      .union(fresh)
+    val sh = shingleSetFrame(batch, idCol, textCol, shingleSize)
+    // ids from the documents, not their postings: a document re-ingested
+    // with no text has no postings, and its old ones must still go
+    batchWins(store, containmentPostingStore(sh, buckets), "id_b",
+      sh.select(col("id")))
   }
 
   /** BUCKET-LOCAL incremental maintenance of a WRITTEN
@@ -671,10 +678,8 @@ object Dedup {
       .select(col("id_b"), col("nb"), col("g"), col("bucket"))
     val freshPost = containmentPostingStore(fresh, buckets)
       .where(col("bucket").isin(affected: _*))
-    val merged = sharedShuffle(slice
-      .join(batchIds.select(col("id").as("__bid")),
-        col("id_b") === col("__bid"), "left_anti")
-      .union(freshPost), col("bucket"), pinned = false)
+    val merged = sharedShuffle(batchWins(slice, freshPost, "id_b", batchIds),
+      col("bucket"), pinned = false)
     // buckets the merge will actually write, computed from the MERGED
     // frame (a post-write read could not tell fresh rows from the stale
     // ones still sitting in a bucket the merge emptied)
@@ -1103,24 +1108,11 @@ object Dedup {
       .agg(min(col("pp")).as("pp"), min(col("na")).as("na"),
         min(col("nb")).as("nb"))
       .filter(least(col("na") - eStarPa, col("nb") - eStarPb) >= oMin)
-      .select(col("id_a"), col("id_b"), col("na"), col("nb"))
-    // exact verify: the arrays are sorted ascending (shingle kernel), so
-    // overlap is ONE allocation-free merge pass ([[SortedLongOverlap]])
-    // and union follows as na + nb − o — no array_intersect/array_union
-    // hash sets, which dominated the verify profile on dense corpora.
-    // candidates frozen for containmentCore's double-broadcast reason.
+      .select(col("id_a"), col("id_b"))
+    // candidates frozen for containmentCore's double-broadcast reason
     val sh = frozen.select(col("id"), col("sh"))
-    sharedShuffle(candidates, col("id_a"), pinned = false)
-      .join(sh.withColumnRenamed("id", "id_a").withColumnRenamed("sh", "sh_a"), "id_a")
-      .join(sh.withColumnRenamed("id", "id_b").withColumnRenamed("sh", "sh_b"), "id_b")
-      .withColumn("o", graft.functions.NativeExpressions
-        .sorted_long_overlap(col("sh_a"), col("sh_b")))
-      .withColumn("jaccard",
-        when(col("na") + col("nb") - col("o") > 0,
-          col("o").cast("double") / (col("na") + col("nb") - col("o")))
-          .otherwise(lit(1.0)))
-      .filter(col("jaccard") >= threshold)
-      .select(col("id_a"), col("id_b"), round(col("jaccard"), 6).as("jaccard"))
+    exactJaccardVerify(sharedShuffle(candidates, col("id_a"), pinned = false),
+      sh, sh, "a", "b", threshold)
   }
 
   /** Materialize `df` through ONE hash exchange on `key` and freeze the

@@ -97,6 +97,12 @@ object Opq {
     * kernel matters because iterative trainers downstream re-execute
     * this projection once per job — q210 ran 5× slower on the
     * interpreted form).
+    *
+    * An IVF+PQ index in rotated space (q210, q214) rotates its corpus and
+    * every merged batch with this, and each query with [[rotateVector]];
+    * `Pq`'s build, merge and serve are unchanged. The rotation is a
+    * frozen model like the coarse quantizer and codebooks, which must be
+    * trained on rotated vectors: retrain all three together or none.
     */
   def rotate(corpus: DataFrame, idCol: String, vecCol: String,
       rotation: Array[Array[Double]], roundDp: Int = 6): DataFrame =

@@ -198,61 +198,9 @@ object Pq {
         col("cell").cast("string"))))
       .as("codes")
     val newRows = buildIvfPqIndex(batch, idCol, vecCol, coarse, codebooks)
-    index.select(col(idCol), col("cell"), checkedCodes)
-      .join(newRows.select(col(idCol).as("__bid")),
-        col(idCol) === col("__bid"), "left_anti")
-      .union(newRows)
+    Dedup.batchWins(index.select(col(idCol), col("cell"), checkedCodes),
+      newRows, idCol, newRows)
   }
-
-  /** [[buildIvfPqIndex]] in OPQ-rotated space: every vector is rotated
-    * ([[Opq.rotate]] — one broadcast d×d narrow fold fused into the
-    * scan, zero extra shuffle) before coarse assignment and subspace
-    * encoding. `coarse` and `codebooks` must have been trained on
-    * ROTATED vectors (train on `Opq.rotate(corpus, …)` — the models and
-    * the index must live in the same space). The index schema and the
-    * serve path are unchanged: rotation costs d² multiplies per vector
-    * at BUILD time only.
-    */
-  def buildIvfPqIndexRotated(corpus: DataFrame, idCol: String,
-      vecCol: String, rotation: Array[Array[Double]],
-      coarse: Array[Array[Double]],
-      codebooks: Array[Array[Array[Double]]], roundDp: Int = 6): DataFrame =
-    buildIvfPqIndex(Opq.rotate(corpus, idCol, vecCol, rotation, roundDp),
-      idCol, vecCol, coarse, codebooks)
-
-  /** [[mergeIvfPqIndex]] in OPQ-rotated space: the arriving batch is
-    * rotated with the SAME frozen rotation the index was built with
-    * before cell assignment and encoding (rotation is part of the
-    * frozen model set, exactly like `coarse` and `codebooks` — retrain
-    * all three together or none). Completes the rotated index
-    * lifecycle: build ([[buildIvfPqIndexRotated]]) → merge → serve
-    * ([[ivfPqTopKRotated]]). Same batch-wins anti-join contract; with
-    * frozen models, merge(build(A), B) ≡ build((A ∖ ids(B)) ∪ B) holds
-    * bit for bit in rotated space too (q214 oracle-certifies it through
-    * the composed search).
-    */
-  def mergeIvfPqIndexRotated(index: DataFrame, batch: DataFrame,
-      idCol: String, vecCol: String, rotation: Array[Array[Double]],
-      coarse: Array[Array[Double]],
-      codebooks: Array[Array[Array[Double]]], roundDp: Int = 6): DataFrame =
-    mergeIvfPqIndex(index, Opq.rotate(batch, idCol, vecCol, rotation, roundDp),
-      idCol, vecCol, coarse, codebooks)
-
-  /** [[ivfPqTopK]] against a [[buildIvfPqIndexRotated]] index: the query
-    * rotates ONCE on the driver (d² flops — [[Opq.rotateVector]], same
-    * fold order and rounding as the build side) and the scan path is
-    * byte-identical to the unrotated serve — probe pruning, ADC lookup
-    * tables, TakeOrdered cut. Orthogonality makes rotated-space ADC
-    * distances equal true distances up to quantization error, so this is
-    * a pure recall upgrade at zero per-row serve cost.
-    */
-  def ivfPqTopKRotated(index: DataFrame, idCol: String,
-      rotation: Array[Array[Double]],
-      coarse: Array[Array[Double]], codebooks: Array[Array[Array[Double]]],
-      query: Array[Double], nprobe: Int, topK: Int,
-      roundDp: Int = 6): DataFrame =
-    ivfPqTopK(index, idCol, coarse, codebooks,
-      Opq.rotateVector(query, rotation, roundDp), nprobe, topK)
 
   /** IVF+PQ query: probe the `nprobe` cells nearest the query (driver
     * arithmetic, (distance, index) tiebreak), then ADC-rank ONLY the

@@ -105,23 +105,29 @@ object Retrieval {
       .select(col("query_id"), col("rank"), col("doc_id"), col("score"))
   }
 
-  /** Build the persisted BM25 index: (doclens, postings) — the lexical
-    * sibling of the minhash (q131) and IVF+PQ (q143) index tables.
-    * `doclens` is (doc_id, dl) — one 16-byte row per document, empty
-    * docs INCLUDED (they carry corpus stats: N and avgdl must count
-    * them, exactly as [[bm25TopK]]'s direct pass does). `postings` is
-    * (doc_id, term, tf, dl) over the FULL vocabulary, dl denormalized
-    * into the posting so the query path never joins back to the corpus.
-    * Both are plain DataFrames meant to be written partitioned (by
-    * term-hash range for postings at 100 TB) and maintained by
+  /** Build the persisted BM25 index — the lexical sibling of the minhash
+    * (q131) and IVF+PQ (q143) index tables — as ONE table
+    * (doc_id, term, tf, dl) holding two row kinds:
+    *   - one doclens row per document, (doc_id, term = NULL, tf = NULL,
+    *     dl), empty docs INCLUDED (they carry corpus stats: N and avgdl
+    *     must count them, exactly as [[bm25TopK]]'s direct pass does);
+    *   - one posting row per (doc_id, term) over the FULL vocabulary, dl
+    *     denormalized into it so the query path never joins back to the
+    *     corpus.
+    * NULL term is unambiguous — tokenization never yields a null token.
+    * One table, not a (doclens, postings) pair, because a maintenance
+    * path swaps ONE directory atomically
+    * ([[graft.streaming.Streaming.maintainBm25Index]]) and two
+    * separately-swapped tables could be observed torn. Written
+    * partitioned (by term-hash range at 100 TB) and maintained by
     * [[bm25IndexMerge]] — the tokenize+count pass is paid once at build,
     * never again per query.
     */
-  def bm25Index(docs: DataFrame, idCol: String,
-      textCol: String): (DataFrame, DataFrame) = {
+  def bm25Index(docs: DataFrame, idCol: String, textCol: String): DataFrame = {
     val toks = TextOps.tokens(lower(col(textCol)))
     val par = graft.core.Par.ensure(docs)
     val doclens = par.select(col(idCol).as("doc_id"),
+      lit(null).cast("string").as("term"), lit(null).cast("long").as("tf"),
       size(toks).cast("long").as("dl"))
     val postings = par
       .select(col(idCol).as("doc_id"), size(toks).cast("long").as("dl"),
@@ -129,91 +135,46 @@ object Retrieval {
       .groupBy(col("doc_id"), col("term"))
       .agg(count(lit(1)).as("tf"), first(col("dl")).as("dl"))
       .select(col("doc_id"), col("term"), col("tf"), col("dl"))
-    (doclens, postings)
+    doclens.union(postings)
   }
 
-  /** Fold a document batch into a persisted BM25 index without
-    * rebuilding: the batch alone is tokenized and counted, re-ingested
-    * ids take the batch's rows (batch-wins via 8-byte-id anti-joins on
-    * BOTH tables — a re-ingested doc's old postings must vanish even
-    * for terms its new text no longer contains, which is why the
-    * posting anti-join is by doc, not (doc, term)). merge(build(A), B)
-    * ≡ build((A ∖ ids(B)) ∪ B) table for table — q148 certifies it
-    * through the composed query path.
+  /** Fold a document batch into a persisted [[bm25Index]] without
+    * rebuilding: the batch alone is tokenized and counted, and
+    * re-ingested ids take the batch's rows ([[Dedup.batchWins]] by doc
+    * id over both row kinds — a re-ingested doc's stale doclens row AND
+    * all its old postings vanish together, even for terms its new text
+    * no longer contains, which is why the anti-join is by doc, not
+    * (doc, term)). Rows carry no corpus state, so
+    * merge(build(A), B) ≡ build((A ∖ ids(B)) ∪ B) row for row — q148
+    * certifies it through the composed query path — and a replayed
+    * batch merges to the same table.
     */
-  def bm25IndexMerge(doclens: DataFrame, postings: DataFrame,
-      batch: DataFrame, idCol: String,
-      textCol: String): (DataFrame, DataFrame) = {
-    val (bl, bp) = bm25Index(batch, idCol, textCol)
-    def keep(t: DataFrame) = t
-      .join(bl.select(col("doc_id").as("__bid")),
-        col("doc_id") === col("__bid"), "left_anti")
-    (keep(doclens.select(col("doc_id"), col("dl"))).union(bl),
-      keep(postings.select(col("doc_id"), col("term"), col("tf"),
-        col("dl"))).union(bp))
-  }
-
-  /** BM25 top-k served FROM the persisted index: identical semantics
-    * and arithmetic to [[bm25TopK]] (same scoring tail), but the corpus
-    * text is never touched — the term-filtered postings probe plus a
-    * 2-value aggregate over `doclens` replace both corpus passes. At
-    * 100 TB with term-partitioned postings this reads only the query
-    * terms' posting lists.
-    */
-  /** Single-table encoding of the ([[bm25Index]] doclens, postings)
-    * pair, for maintenance paths that fold ONE snapshot (the
-    * [[graft.streaming.Streaming.maintainBm25Index]] twin —
-    * foldSnapshotStream swaps one directory atomically, and two
-    * separately-swapped tables could be observed torn): the doclens row
-    * is (doc_id, term = NULL, tf = NULL, dl), postings keep their
-    * columns. NULL term is unambiguous — [[bm25Index]] tokenization
-    * never yields a null token. [[bm25SplitCombined]] recovers the pair
-    * for the unchanged [[bm25AgainstIndex]] serve path.
-    */
-  def bm25IndexCombined(docs: DataFrame, idCol: String,
+  def bm25IndexMerge(index: DataFrame, batch: DataFrame, idCol: String,
       textCol: String): DataFrame = {
-    val (dl, post) = bm25Index(docs, idCol, textCol)
-    dl.select(col("doc_id"), lit(null).cast("string").as("term"),
-        lit(null).cast("long").as("tf"), col("dl"))
-      .union(post.select(col("doc_id"), col("term"), col("tf"), col("dl")))
+    val fresh = bm25Index(batch, idCol, textCol)
+    Dedup.batchWins(index, fresh, "doc_id",
+      fresh.where(col("term").isNull))
   }
 
-  /** Decode a [[bm25IndexCombined]] snapshot back to (doclens,
-    * postings).
+  /** BM25 top-k served FROM a persisted [[bm25Index]]: identical
+    * semantics and arithmetic to [[bm25TopK]] (same scoring tail), but
+    * the corpus text is never touched — the term-filtered postings probe
+    * plus a 2-value aggregate over the doclens rows replace both corpus
+    * passes. At 100 TB with term-partitioned postings this reads only
+    * the query terms' posting lists.
     */
-  def bm25SplitCombined(snapshot: DataFrame): (DataFrame, DataFrame) = (
-    snapshot.where(col("term").isNull).select(col("doc_id"), col("dl")),
-    snapshot.where(col("term").isNotNull)
-      .select(col("doc_id"), col("term"), col("tf"), col("dl")))
-
-  /** [[bm25IndexMerge]] on the combined encoding: ONE by-doc anti-join
-    * covers both row kinds (every row is doc-keyed), so a re-ingested
-    * doc's stale doclens row AND all its stale postings vanish together
-    * — merge(build(A), B) ≡ build((A ∖ ids(B)) ∪ B) row for row, rows
-    * carry no corpus state.
-    */
-  def bm25IndexMergeCombined(snapshot: DataFrame, batch: DataFrame,
-      idCol: String, textCol: String): DataFrame = {
-    val fresh = bm25IndexCombined(batch, idCol, textCol)
-    snapshot.select(col("doc_id"), col("term"), col("tf"), col("dl"))
-      .join(fresh.where(col("term").isNull)
-        .select(col("doc_id").as("__bid")),
-        col("doc_id") === col("__bid"), "left_anti")
-      .union(fresh)
-  }
-
-  def bm25AgainstIndex(spark: SparkSession, doclens: DataFrame,
-      postings: DataFrame, queries: Seq[(Long, Seq[String])], k: Int = 10,
+  def bm25AgainstIndex(spark: SparkSession, index: DataFrame,
+      queries: Seq[(Long, Seq[String])], k: Int = 10,
       k1: Double = 1.2, b: Double = 0.75): DataFrame = {
     require(queries.nonEmpty && queries.forall(_._2.nonEmpty),
       "need at least one query with at least one term")
     require(queries.forall { case (_, ts) => ts.distinct == ts },
       "query terms must be distinct within a query")
     val allTerms = queries.flatMap(_._2).distinct
-    val stats = doclens.agg(
+    val stats = index.where(col("term").isNull).agg(
       count(lit(1)).as("n_docs"), sum(col("dl")).as("total_len"))
     val tf = Dedup.sharedShuffle(
-      postings.where(col("term").isin(allTerms: _*))
+      index.where(col("term").isin(allTerms: _*))
         .select(col("doc_id"), col("term"), col("tf"), col("dl")),
       col("term"))
     val df = tf.groupBy(col("term")).agg(count(lit(1)).as("df"))

@@ -579,30 +579,27 @@ object Streaming {
   /** Continuous maintenance of the persisted BM25 index — the last
     * persisted index without a streaming twin (minhash, exact-Jaccard,
     * and the three sketches all have one): fold each document
-    * micro-batch with [[graft.scale.Retrieval.bm25IndexMergeCombined]],
-    * the streaming form of q148's batch merge. The snapshot is the
-    * SINGLE-TABLE encoding ([[graft.scale.Retrieval.bm25IndexCombined]]
-    * — doclens rows ride with term = NULL) because foldSnapshotStream
-    * swaps one directory atomically and the (doclens, postings) pair
-    * must never be observed torn. Each batch's text is tokenized and
-    * counted exactly once; the by-doc batch-wins anti-join drops a
-    * re-ingested doc's stale doclens row and ALL its stale postings
-    * together (even for terms its new text no longer contains), so the
-    * folded snapshot is row-equal to a from-scratch build over the
-    * latest text per id. Replays are safe: the merge is idempotent.
-    * Serve with [[graft.scale.Retrieval.bm25SplitCombined]] →
-    * [[graft.scale.Retrieval.bm25AgainstIndex]], unchanged. Same
-    * crash-consistent snapshot swap as [[applyCdcStream]].
+    * micro-batch with [[graft.scale.Retrieval.bm25IndexMerge]], the
+    * streaming form of q148's batch merge. The snapshot is the index's
+    * one table (doclens rows ride with term = NULL), so
+    * foldSnapshotStream's atomic directory swap never exposes doclens
+    * and postings torn. Each batch's text is tokenized and counted
+    * exactly once; the by-doc batch-wins anti-join drops a re-ingested
+    * doc's stale doclens row and ALL its stale postings together (even
+    * for terms its new text no longer contains), so the folded snapshot
+    * is row-equal to a from-scratch build over the latest text per id.
+    * Replays are safe: the merge is idempotent. Serve the snapshot with
+    * [[graft.scale.Retrieval.bm25AgainstIndex]]. Same crash-consistent
+    * snapshot swap as [[applyCdcStream]].
     */
   def maintainBm25Index(docs: DataFrame, statePath: String,
       idCol: String, textCol: String):
       org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
     foldSnapshotStream(docs, statePath,
       batch => graft.scale.Retrieval
-        .bm25IndexCombined(batch.limit(0), idCol, textCol).schema) {
+        .bm25Index(batch.limit(0), idCol, textCol).schema) {
       (current, batch, _) =>
-        graft.scale.Retrieval.bm25IndexMergeCombined(current, batch,
-          idCol, textCol)
+        graft.scale.Retrieval.bm25IndexMerge(current, batch, idCol, textCol)
     }
 
   /** Continuous cardinality-sketch maintenance: keep a persisted

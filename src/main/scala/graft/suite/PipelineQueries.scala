@@ -273,8 +273,8 @@ object PipelineQueries {
       val pts = T.lineitem(s, d)
         .select(col("l_orderkey"), col("l_linenumber"),
           floor(col("l_extendedprice") * 100).cast("long").as("p"))
-      graft.scale.RangeJoin
-        .pointInInterval(pts, iv, "p", "lo", "hi", binWidth = 100000L)
+      graft.operators.RangeJoin
+        .pointInInterval(pts, "p", iv, "lo", "hi", binWidth = 100000L)
         .groupBy(col("o_orderkey"))
         .agg(count(lit(1)).as("n_points"), sum(col("p")).as("sum_points"))
         .orderBy(col("o_orderkey"))
@@ -568,11 +568,11 @@ object PipelineQueries {
       ORDER BY rank"""))
 
   /** OPQ rotation composed into the FULL IVF+PQ serve path
-    * (Pq.buildIvfPqIndexRotated + Pq.ivfPqTopKRotated): q142's composed
-    * billion-scale ANN shape with every vector rotated before coarse
-    * assignment and subspace encoding, and the query rotated once
-    * driver-side — the production form of q205's rotation certificate
-    * (q205 proves rotate→encode→ADC; this proves the rotation threads
+    * (Opq.rotate → Pq.buildIvfPqIndex, Opq.rotateVector → Pq.ivfPqTopK):
+    * q142's composed billion-scale ANN shape with every vector rotated
+    * before coarse assignment and subspace encoding, and the query
+    * rotated once driver-side — the production form of q205's rotation
+    * certificate (q205 proves rotate→encode→ADC; this proves the rotation threads
     * through coarse quantization, cell probing, and the cell-restricted
     * ADC ranking without touching the serve path's shape). The pinned
     * Hadamard rotation keeps the oracle exact; the corpus-trained OPQ
@@ -590,13 +590,13 @@ object PipelineQueries {
         .lloydTrain(re, "vec_id", "embedding", k = 8, iters = 2)
       val cb = graft.scale.Pq.trainCodebooks(re, "vec_id", "embedding",
         dim = 64, m = 4, k = 4, iters = 2)
-      val idx = graft.scale.Pq.buildIvfPqIndexRotated(emb, "vec_id",
-        "embedding", rot, coarse, cb)
+      val idx = graft.scale.Pq.buildIvfPqIndex(re, "vec_id", "embedding",
+        coarse, cb)
       val q0 = emb.where(col("vec_id") === 0)
         .select(transform(col("embedding"), x => x.cast("double")).as("v"))
         .collect().head.getSeq[Double](0).toArray
-      graft.scale.Pq.ivfPqTopKRotated(idx, "vec_id", rot, coarse, cb, q0,
-        nprobe = 2, topK = 10)
+      graft.scale.Pq.ivfPqTopK(idx, "vec_id", coarse, cb,
+          graft.scale.Opq.rotateVector(q0, rot), nprobe = 2, topK = 10)
         .orderBy(col("rank"))
     },
     Some(s"""WITH e0 AS (
@@ -631,7 +631,7 @@ object PipelineQueries {
       ORDER BY rank"""))
 
   /** Incremental maintenance of the ROTATED IVF+PQ index
-    * (Pq.mergeIvfPqIndexRotated) — q143's frozen-model merge lifecycle
+    * (Opq.rotate → Pq.mergeIvfPqIndex) — q143's frozen-model merge lifecycle
     * with the rotation as a fourth frozen model: coarse quantizer,
     * codebooks AND rotation train on the corpus snapshot; the arriving
     * batch (including re-ingested ids with REVERSED raw embeddings —
@@ -656,15 +656,16 @@ object PipelineQueries {
         .lloydTrain(rc, "vec_id", "embedding", k = 8, iters = 2)
       val cb = graft.scale.Pq.trainCodebooks(rc, "vec_id", "embedding",
         dim = 64, m = 4, k = 4, iters = 2)
-      val idx = graft.scale.Pq.buildIvfPqIndexRotated(corpus, "vec_id",
-        "embedding", rot, coarse, cb)
-      val merged = graft.scale.Pq.mergeIvfPqIndexRotated(idx, batch,
-        "vec_id", "embedding", rot, coarse, cb)
+      val idx = graft.scale.Pq.buildIvfPqIndex(rc, "vec_id", "embedding",
+        coarse, cb)
+      val merged = graft.scale.Pq.mergeIvfPqIndex(idx,
+        graft.scale.Opq.rotate(batch, "vec_id", "embedding", rot),
+        "vec_id", "embedding", coarse, cb)
       val q0 = emb.where(col("vec_id") === 0)
         .select(transform(col("embedding"), x => x.cast("double")).as("v"))
         .collect().head.getSeq[Double](0).toArray
-      graft.scale.Pq.ivfPqTopKRotated(merged, "vec_id", rot, coarse, cb, q0,
-        nprobe = 2, topK = 10)
+      graft.scale.Pq.ivfPqTopK(merged, "vec_id", coarse, cb,
+          graft.scale.Opq.rotateVector(q0, rot), nprobe = 2, topK = 10)
         .orderBy(col("rank"))
     },
     Some(s"""WITH e0 AS (
@@ -1309,11 +1310,11 @@ object PipelineQueries {
       val batch = docs.where(col("doc_id") % 3 === 0)
         .unionByName(docs.where(col("doc_id") % 30 === 1)
           .withColumn("text", concat(col("text"), lit(" spark spark spark"))))
-      val (dl0, p0) = graft.scale.Retrieval.bm25Index(corpus, "doc_id", "text")
-      val (dl1, p1) = graft.scale.Retrieval
-        .bm25IndexMerge(dl0, p0, batch, "doc_id", "text")
+      val merged = graft.scale.Retrieval.bm25IndexMerge(
+        graft.scale.Retrieval.bm25Index(corpus, "doc_id", "text"), batch,
+        "doc_id", "text")
       graft.scale.Retrieval
-        .bm25AgainstIndex(s, dl1, p1, ScaleQueries.Bm25Queries, k = 10)
+        .bm25AgainstIndex(s, merged, ScaleQueries.Bm25Queries, k = 10)
         .orderBy(col("query_id"), col("rank"))
     },
     Some {

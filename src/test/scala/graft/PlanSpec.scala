@@ -404,13 +404,15 @@ class PlanSpec extends SparkSpec {
     import graft.scale.Retrieval
     val docs = Seq((1L, "filler filler filler filler"),
       (2L, "spark spark filler filler")).toDF("doc_id", "text")
-    val (dl, p0) = Retrieval.bm25Index(docs, "doc_id", "text")
-    val tampered = p0.collect()
-      .map(r => (r.getLong(0), r.getString(1), r.getLong(2), r.getLong(3)))
-      .filterNot { case (id, t, _, _) => id == 1L && t == "filler" }
-      .toSeq ++ Seq((1L, "spark", 50L, 4L))
+    // doclens rows (term = NULL) pass through untouched; only postings
+    // are tampered
+    val tampered = Retrieval.bm25Index(docs, "doc_id", "text").collect()
+      .map(r => (r.getLong(0), Option(r.getString(1)),
+        Option(r.get(2)).map(_.asInstanceOf[Long]), r.getLong(3)))
+      .filterNot { case (id, t, _, _) => id == 1L && t.contains("filler") }
+      .toSeq ++ Seq((1L, Some("spark"), Some(50L), 4L))
     val tp = tampered.toDF("doc_id", "term", "tf", "dl")
-    val out = Retrieval.bm25AgainstIndex(spark, dl, tp,
+    val out = Retrieval.bm25AgainstIndex(spark, tp,
       Seq(9L -> Seq("spark")), k = 2)
       .collect().map(r => (r.getLong(1), r.getLong(2))).toSeq
     assert(out.head == ((1L, 1L)),

@@ -32,7 +32,7 @@ class RangeJoinSpec extends SparkSpec {
     val intervals = Seq(("u1", 100L, 0L, 20L), ("u2", 200L, 0L, 20L),
       ("u1", 300L, 40L, 60L)).toDF("user", "iid", "lo", "hi")
     val got = RangeJoin.pointInInterval(points, "p", intervals, "lo", "hi",
-        binWidth = 16L, key = Some("user"))
+        binWidth = 16L, equiKeys = Seq("user" -> "user"))
       .select("pid", "iid").as[(Long, Long)].collect().sorted.toSeq
     // u1@10 -> 100 (not u2's 200); u2@10 -> 200; u1@50 -> 300
     assert(got == Seq((1L, 100L), (2L, 200L), (3L, 300L)))
@@ -64,5 +64,51 @@ class RangeJoinSpec extends SparkSpec {
     val out = RangeJoin.pointInInterval(points, "p", intervals, "lo", "hi", 4L)
     assert(out.columns.toSeq == Seq("id", "p", "id_r", "lo", "hi"))
     assert(out.select("id", "id_r").as[(Long, Long)].collect().head == ((1L, 9L)))
+  }
+
+  test("rangeJoin: exact inclusive-bounds pairing across bin boundaries") {
+    import spark.implicits._
+    val pts = Seq((1L, 0L), (2L, 10L), (3L, 19L), (4L, 20L), (5L, 25L),
+      (6L, 31L)).toDF("pid", "p")
+    // intervals deliberately straddle the width-10 bin edges
+    val iv = Seq((100L, 0L, 19L), (200L, 20L, 30L), (300L, 5L, 25L))
+      .toDF("ivid", "lo", "hi")
+    val got = RangeJoin
+      .pointInInterval(pts, "p", iv, "lo", "hi", binWidth = 10L)
+      .select("pid", "ivid").as[(Long, Long)].collect().toSet
+    val want = (for {
+      (pid, p) <- Seq((1L, 0L), (2L, 10L), (3L, 19L), (4L, 20L), (5L, 25L), (6L, 31L))
+      (ivid, lo, hi) <- Seq((100L, 0L, 19L), (200L, 20L, 30L), (300L, 5L, 25L))
+      if p >= lo && p <= hi
+    } yield (pid, ivid)).toSet
+    assert(got === want)
+    // no duplicate pairs even though interval 300 spans three bins
+    val rows = RangeJoin
+      .pointInInterval(pts, "p", iv, "lo", "hi", binWidth = 10L)
+      .select("pid", "ivid").collect()
+    assert(rows.length == got.size)
+  }
+
+  test("rangeJoin: equi-key variant only pairs within the key") {
+    import spark.implicits._
+    val pts = Seq((1L, "a", 5L), (2L, "b", 5L)).toDF("pid", "pk", "p")
+    val iv = Seq((100L, "a", 0L, 10L)).toDF("ivid", "ik", "lo", "hi")
+    val got = RangeJoin
+      .pointInInterval(pts, "p", iv, "lo", "hi", binWidth = 4L,
+        equiKeys = Seq("pk" -> "ik"))
+      .select("pid", "ivid").as[(Long, Long)].collect().toSet
+    assert(got === Set((1L, 100L)))
+  }
+
+  test("rangeJoin: an interval spanning >= maxBins fails fast, not silently") {
+    import spark.implicits._
+    val pts = Seq((1L, 5L)).toDF("pid", "p")
+    val iv = Seq((100L, 0L, 1000L)).toDF("ivid", "lo", "hi")
+    val ex = intercept[Exception] {
+      RangeJoin
+        .pointInInterval(pts, "p", iv, "lo", "hi", binWidth = 10L,
+          maxBinsPerInterval = 50).collect()
+    }
+    assert(ex.getMessage != null)
   }
 }

@@ -53,18 +53,9 @@ class RangeJoinRewriteSpec extends SparkSpec {
     }
   }
 
-  test("kill switch and non-matching shapes are left untouched") {
+  test("non-matching shapes are left untouched") {
     import spark.implicits._
     withRule {
-      // config off -> original nested-loop plan
-      spark.conf.set("spark.graft.rangeJoin.enabled", "false")
-      try {
-        val off = points.join(intervals,
-          col("p") >= col("lo") && col("p") <= col("hi"))
-        assert(off.queryExecution.executedPlan.toString
-          .contains("BroadcastNestedLoopJoin"))
-      } finally spark.conf.unset("spark.graft.rangeJoin.enabled")
-
       // a single-side extra conjunct gets pushed below the join BEFORE
       // this batch runs, leaving the pure range -> rewritten (and right)
       val pushed = points.join(intervals,

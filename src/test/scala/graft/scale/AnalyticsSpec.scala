@@ -280,51 +280,6 @@ class AnalyticsSpec extends SparkSpec {
     assert(plain === truncated)
   }
 
-  // ---- RangeJoin.pointInInterval ---------------------------------------
-
-  test("rangeJoin: exact inclusive-bounds pairing across bin boundaries") {
-    val pts = Seq((1L, 0L), (2L, 10L), (3L, 19L), (4L, 20L), (5L, 25L),
-      (6L, 31L)).toDF("pid", "p")
-    // intervals deliberately straddle the width-10 bin edges
-    val iv = Seq((100L, 0L, 19L), (200L, 20L, 30L), (300L, 5L, 25L))
-      .toDF("ivid", "lo", "hi")
-    val got = graft.scale.RangeJoin
-      .pointInInterval(pts, iv, "p", "lo", "hi", binWidth = 10L)
-      .select("pid", "ivid").as[(Long, Long)].collect().toSet
-    val want = (for {
-      (pid, p) <- Seq((1L, 0L), (2L, 10L), (3L, 19L), (4L, 20L), (5L, 25L), (6L, 31L))
-      (ivid, lo, hi) <- Seq((100L, 0L, 19L), (200L, 20L, 30L), (300L, 5L, 25L))
-      if p >= lo && p <= hi
-    } yield (pid, ivid)).toSet
-    assert(got === want)
-    // no duplicate pairs even though interval 300 spans three bins
-    val rows = graft.scale.RangeJoin
-      .pointInInterval(pts, iv, "p", "lo", "hi", binWidth = 10L)
-      .select("pid", "ivid").collect()
-    assert(rows.length == got.size)
-  }
-
-  test("rangeJoin: equi-key variant only pairs within the key") {
-    val pts = Seq((1L, "a", 5L), (2L, "b", 5L)).toDF("pid", "pk", "p")
-    val iv = Seq((100L, "a", 0L, 10L)).toDF("ivid", "ik", "lo", "hi")
-    val got = graft.scale.RangeJoin
-      .pointInInterval(pts, iv, "p", "lo", "hi", binWidth = 4L,
-        equiKeys = Seq("pk" -> "ik"))
-      .select("pid", "ivid").as[(Long, Long)].collect().toSet
-    assert(got === Set((1L, 100L)))
-  }
-
-  test("rangeJoin: an interval spanning >= maxBins fails fast, not silently") {
-    val pts = Seq((1L, 5L)).toDF("pid", "p")
-    val iv = Seq((100L, 0L, 1000L)).toDF("ivid", "lo", "hi")
-    val ex = intercept[Exception] {
-      graft.scale.RangeJoin
-        .pointInInterval(pts, iv, "p", "lo", "hi", binWidth = 10L,
-          maxBinsPerInterval = 50).collect()
-    }
-    assert(ex.getMessage != null)
-  }
-
   // ---- Pq --------------------------------------------------------------
 
   test("pq: k-vector corpus quantizes losslessly (codes = identity, self-dist 0)") {

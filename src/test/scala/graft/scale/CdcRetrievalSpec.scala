@@ -184,11 +184,11 @@ class CdcRetrievalSpec extends SparkSpec {
       .toDF("doc_id", "text")
     val qs = Seq(7L -> Seq("spark", "merge", "window"))
     // 1) serving from a built index reproduces the direct path exactly
-    val (dl, p) = Retrieval.bm25Index(corpus, "doc_id", "text")
+    val idx = Retrieval.bm25Index(corpus, "doc_id", "text")
     val direct = Retrieval.bm25TopK(spark, corpus, "doc_id", "text", qs, k = 5)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2),
         r.getDouble(3))).toSet
-    val served = Retrieval.bm25AgainstIndex(spark, dl, p, qs, k = 5)
+    val served = Retrieval.bm25AgainstIndex(spark, idx, qs, k = 5)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2),
         r.getDouble(3))).toSet
     assert(served === direct)
@@ -197,7 +197,7 @@ class CdcRetrievalSpec extends SparkSpec {
     val batch = Seq(
       (2L, "spark spark filler filler"),
       (6L, "window window merge")).toDF("doc_id", "text")
-    val (mdl, mp) = Retrieval.bm25IndexMerge(dl, p, batch, "doc_id", "text")
+    val merged = Retrieval.bm25IndexMerge(idx, batch, "doc_id", "text")
     val effective = Seq(
       (1L, "spark merge window spark"),
       (2L, "spark spark filler filler"),
@@ -205,9 +205,16 @@ class CdcRetrievalSpec extends SparkSpec {
       (4L, "nothing relevant here at"),
       (5L, ""),
       (6L, "window window merge")).toDF("doc_id", "text")
-    val (rdl, rp) = Retrieval.bm25Index(effective, "doc_id", "text")
+    val rebuilt = Retrieval.bm25Index(effective, "doc_id", "text")
     def rows(df: org.apache.spark.sql.DataFrame) = df.collect()
       .map(_.toSeq).toSet
+    // the index's two row kinds: doclens rows carry term = NULL
+    def doclens(t: org.apache.spark.sql.DataFrame) =
+      t.where(col("term").isNull).select(col("doc_id"), col("dl"))
+    def postings(t: org.apache.spark.sql.DataFrame) =
+      t.where(col("term").isNotNull)
+    val (mdl, mp, rdl, rp) =
+      (doclens(merged), postings(merged), doclens(rebuilt), postings(rebuilt))
     assert(rows(mdl) === rows(rdl))
     assert(rows(mp) === rows(rp))
     assert(mp.where(col("doc_id") === 2 && col("term") === "merge")

@@ -262,16 +262,22 @@ class DedupLifecycleSpec extends SparkSpec {
     val staleDocs = docs.withColumn("text",
       when(col("doc_id") === 2, lit("stale words only here"))
         .otherwise(col("text")))
+    // doc 3 is re-ingested with NULL text: it has no postings now, and
+    // its old ones must go all the same
+    val noText = lit(null).cast("string")
     val merged = Dedup.containmentPostingStoreMerge(
         Dedup.containmentPostingStore(
           Dedup.jaccardIndex(staleDocs, "doc_id", "text", shingleSize = 2),
           buckets = 16),
-        docs.filter(col("doc_id") === 2), "doc_id", "text",
-        shingleSize = 2, buckets = 16)
+        docs.filter(col("doc_id") === 2).unionByName(
+          docs.filter(col("doc_id") === 3).withColumn("text", noText)),
+        "doc_id", "text", shingleSize = 2, buckets = 16)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2),
         r.getInt(3))).toSet
     val rebuilt = Dedup.containmentPostingStore(
-        Dedup.jaccardIndex(docs, "doc_id", "text", shingleSize = 2),
+        Dedup.jaccardIndex(docs.withColumn("text",
+            when(col("doc_id") === 3, noText).otherwise(col("text"))),
+          "doc_id", "text", shingleSize = 2),
         buckets = 16)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2),
         r.getInt(3))).toSet

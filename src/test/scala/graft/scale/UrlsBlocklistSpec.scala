@@ -226,11 +226,11 @@ class UrlsBlocklistSpec extends SparkSpec {
     val coarse = Clustering.lloydTrain(rc, "id", "vec", k = 4, iters = 2)
     val cb = Pq.trainCodebooks(rc, "id", "vec", dim = 8, m = 4, k = 4,
       iters = 2)
-    val merged = Pq.mergeIvfPqIndexRotated(
-      Pq.buildIvfPqIndexRotated(corpus, "id", "vec", rot, coarse, cb),
-      batch, "id", "vec", rot, coarse, cb)
-    val rebuilt = Pq.buildIvfPqIndexRotated(effective, "id", "vec", rot,
-      coarse, cb)
+    val merged = Pq.mergeIvfPqIndex(
+      Pq.buildIvfPqIndex(rc, "id", "vec", coarse, cb),
+      Opq.rotate(batch, "id", "vec", rot), "id", "vec", coarse, cb)
+    val rebuilt = Pq.buildIvfPqIndex(Opq.rotate(effective, "id", "vec", rot),
+      "id", "vec", coarse, cb)
     def rows(df: org.apache.spark.sql.DataFrame) =
       df.orderBy("id").collect().toSeq
         .map(r => (r.getLong(0), r.getInt(1), r.getSeq[Int](2)))
@@ -257,19 +257,12 @@ class UrlsBlocklistSpec extends SparkSpec {
       val coarse = Clustering.lloydTrain(base, "id", "vec", k = 4, iters = 3)
       val cb = Pq.trainCodebooks(base, "id", "vec", dim = 8, m = 4, k = 4,
         iters = 3)
-      val idx = rot match {
-        case Some(r) => Pq.buildIvfPqIndexRotated(vecs, "id", "vec", r,
-          coarse, cb)
-        case None => Pq.buildIvfPqIndex(vecs, "id", "vec", coarse, cb)
-      }
+      val idx = Pq.buildIvfPqIndex(base, "id", "vec", coarse, cb)
       val queries = Seq(0, 6, 12, 18, 24)
       val hits = queries.map { qi =>
-        val got = (rot match {
-          case Some(r) => Pq.ivfPqTopKRotated(idx, "id", r, coarse, cb,
-            raw(qi), nprobe = 4, topK = 5)
-          case None => Pq.ivfPqTopK(idx, "id", coarse, cb, raw(qi),
-            nprobe = 4, topK = 5)
-        }).collect().map(_.getLong(0)).toSet
+        val q = rot.map(Opq.rotateVector(raw(qi), _)).getOrElse(raw(qi))
+        val got = Pq.ivfPqTopK(idx, "id", coarse, cb, q, nprobe = 4,
+          topK = 5).collect().map(_.getLong(0)).toSet
         (exactTopK(raw(qi), 5) intersect got).size
       }.sum
       hits.toDouble / (queries.size * 5)

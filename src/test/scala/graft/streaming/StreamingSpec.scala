@@ -626,23 +626,20 @@ class StreamingSpec extends SparkSpec {
         .map(r => (r.getLong(0), Option(r.getString(1)),
           if (r.isNullAt(2)) -1L else r.getLong(2), r.getLong(3))).sorted
     assert(rows(spark.read.parquet(state)) === rows(
-      graft.scale.Retrieval.bm25IndexCombined(latest, "doc_id", "text")))
+      graft.scale.Retrieval.bm25Index(latest, "doc_id", "text")))
     // the stale 'three' posting is gone and doc 2's tfs are the NEW ones
     val post = spark.read.parquet(state)
       .where(col("doc_id") === 2L && col("term").isNotNull)
       .collect().map(r => r.getString(1) -> r.getLong(2)).toMap
     assert(post === Map("one" -> 2L, "two" -> 1L), post.toString)
-    // serve equivalence through the UNCHANGED query path
-    val (dlS, poS) = graft.scale.Retrieval.bm25SplitCombined(
-      spark.read.parquet(state))
-    val (dlB, poB) = graft.scale.Retrieval.bm25Index(latest, "doc_id", "text")
+    // serve equivalence: the folded snapshot answers as a fresh build
     val qs = Seq((1L, Seq("alpha", "two")))
-    def served(dl: org.apache.spark.sql.DataFrame,
-        po: org.apache.spark.sql.DataFrame) =
-      graft.scale.Retrieval.bm25AgainstIndex(spark, dl, po, qs, k = 5)
+    def served(index: org.apache.spark.sql.DataFrame) =
+      graft.scale.Retrieval.bm25AgainstIndex(spark, index, qs, k = 5)
         .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2),
           r.getDouble(3))).toSeq
-    assert(served(dlS, poS) === served(dlB, poB))
+    assert(served(spark.read.parquet(state)) === served(
+      graft.scale.Retrieval.bm25Index(latest, "doc_id", "text")))
   }
 
   test("streaming HLL-sketch maintenance converges to a from-scratch sketch") {
