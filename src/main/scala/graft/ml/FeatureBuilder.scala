@@ -16,9 +16,10 @@ import graft.queries.Reports
   * - `<analyte>_latest`: W1 latest-per-(patient, analyte) semantics over
   *   the curated observation table.
   *
-  * Plan shape: IN-list filter → latest-per-key window (one exchange on
-  * (patient_id, code_display)) → MAX-CASE pivot (one exchange on
-  * patient_id) → broadcast-join the (small relative to obs) patient dim.
+  * Plan shape: IN-list filter → one exchange on patient_id →
+  * latest-per-(patient_id, code_display) window → MAX-CASE pivot on the
+  * same partitioning → broadcast-join the (small relative to obs) patient
+  * dim.
   */
 object FeatureBuilder {
 

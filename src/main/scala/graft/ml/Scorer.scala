@@ -2,15 +2,20 @@ package graft.ml
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.Bridge
 
 /** The reference's inference dataflow (test.py:324-343; SURVEY.md §2.5):
   * M1 median-impute → M2 standardize → M3 PCA(14) → M4 KMeans assign →
   * M5 column align → M6 XGB score → M7 risk bands → M8 doctor-question
   * rules.
   *
-  * M1-M4 are pure column arithmetic with broadcast constants — fully
-  * codegen'd, zero shuffles, scales linearly with patients. M6 evaluates
-  * the broadcast tree ensembles in a JVM loop per row.
+  * M1 is one `na.fill`; M2-M4 are two native kernels over the fitted
+  * constants ([[PcaKMeans]]); M6 walks each broadcast tree ensemble in a
+  * JVM loop per row ([[XgbScoreExpr]]). All of it is narrow and runs in
+  * one whole-stage-codegen span: zero shuffles, linear in patients.
+  * A three-model [[inferAll]] plans about 330 optimized-plan expression
+  * nodes (MlSpec guards ≤ 600): planning, not the rows, dominates its cost
+  * at clinic scale.
   */
 object Scorer {
 
@@ -20,60 +25,56 @@ object Scorer {
   def impute(df: DataFrame, p: PipelineParams = PipelineParams.default): DataFrame =
     df.na.fill(p.features.zip(p.imputerMedians).toMap)
 
-  /** M2+M3+M4 as one projection: standardized vector → PCA projection →
-    * argmin distance over the 4 broadcast centers → `cluster` int column.
-    * Expression structure: pca_y_i = Σ_j C[i][j] * ((x_j - μ_j)/σ_j - pm_j);
-    * dist²_k = Σ_i (y_i - c_k_i)²; cluster = argmin_k (ties → lower k,
-    * matching sklearn's argmin).
+  /** M2+M3: the 14-element PCA projection of the 19 features, as the
+    * native [[PcaProject]] kernel over one array of them.
+    */
+  def pcaY(p: PipelineParams = PipelineParams.default): Column =
+    Bridge.column(PcaProject(Bridge.expression(
+      array(p.features.map(f => col(f).cast("double")): _*)), p))
+
+  /** M4: the nearest k-means center of a `pca_y` column ([[NearestCenter]];
+    * ties go to the lower k, as sklearn's argmin; -1 for a null feature).
+    */
+  def nearestCenter(y: Column, p: PipelineParams = PipelineParams.default): Column =
+    Bridge.column(NearestCenter(Bridge.expression(y), p))
+
+  /** M2+M3+M4 as one column: the `cluster` int of the 19 features. */
+  def cluster(p: PipelineParams = PipelineParams.default): Column =
+    nearestCenter(pcaY(p), p)
+
+  /** M2+M3+M4: adds the `cluster` int column (standardize → PCA(14) →
+    * nearest of the 4 k-means centers; see [[PcaKMeans]]).
     */
   def addCluster(df: DataFrame, p: PipelineParams = PipelineParams.default): DataFrame =
     addCluster(df, p, keepY = false)
 
   /** As [[addCluster]]; `keepY = true` additionally retains the 14-dim PCA
-    * projection as an array column `pca_y` (used by the oracle suite to
-    * pin the projection math, and by callers that want the embedding).
+    * projection as an array column `pca_y` before `cluster` (used by the
+    * oracle suite to pin the projection math, and by callers that want the
+    * embedding).
     */
-  def addCluster(df: DataFrame, p: PipelineParams, keepY: Boolean): DataFrame = {
-    val scaled: Vector[Column] = p.features.zipWithIndex.map { case (f, j) =>
-      (col(f) - p.scalerMean(j)) / p.scalerScale(j) - p.pcaMean(j)
-    }
-    val pcaY: Vector[Column] = p.pcaComponents.map { comp =>
-      comp.zip(scaled).map { case (c, s) => s * c }.reduce(_ + _)
-    }
-    val withY = df.withColumn("__y", array(pcaY: _*))
-    val dists: Vector[Column] = p.kmeansCenters.map { center =>
-      center.zipWithIndex.map { case (c, i) =>
-        val d = element_at(col("__y"), i + 1) - c
-        d * d
-      }.reduce(_ + _)
-    }
-    val minDist = dists.reduce((a, b) => least(a, b))
-    val cluster = dists.zipWithIndex.reverse
-      .foldLeft(lit(-1)) { case (acc, (d, k)) => when(d === minDist, k).otherwise(acc) }
-    val out = withY.withColumn("cluster", cluster)
-    if (keepY) out.withColumnRenamed("__y", "pca_y") else out.drop("__y")
-  }
+  def addCluster(df: DataFrame, p: PipelineParams, keepY: Boolean): DataFrame =
+    if (keepY) df.withColumn("pca_y", pcaY(p)).withColumn("cluster", nearestCenter(col("pca_y"), p))
+    else df.withColumn("cluster", cluster(p))
 
   /** M5: align to the 14 model columns (feature_columns.json). */
   def align(df: DataFrame): DataFrame =
     df.select(col("patient_id") +: PipelineParams.modelColumns.map(col): _*)
 
-  /** M6: score one disease model over the aligned frame; adds
-    * `<disease>_prob` (double) and `<disease>_label` (prob > threshold,
-    * test.py:330). Scoring is the [[XgbScoreExpr]] native expression —
-    * the tree walk runs inside whole-stage codegen on the unsafe feature
-    * array (the previous Scala UDF boxed a Seq[Double] per row and split
-    * the codegen span).
+  /** The 14 model columns as one double array, null → NaN (missing), the
+    * layout [[XgbScoreExpr]] reads.
     */
-  def scoreDisease(spark: SparkSession, df: DataFrame, disease: String,
-      modelPath: String, threshold: Double = 0.5): DataFrame = {
-    val model = loaded(modelPath)
-    val bc = spark.sparkContext.broadcast(model)
-    val featArray = array(PipelineParams.modelColumns.map(c =>
-      coalesce(col(c).cast("double"), lit(Double.NaN))): _*)
-    df.withColumn(s"${disease}_prob", XgbScoreExpr.score(featArray, bc))
-      .withColumn(s"${disease}_label", col(s"${disease}_prob") > threshold)
-  }
+  private def modelFeatures: Column = array(PipelineParams.modelColumns.map(c =>
+    coalesce(col(c).cast("double"), lit(Double.NaN))): _*)
+
+  /** M6: the probability of one disease model over a model-feature array
+    * column. Scoring is the [[XgbScoreExpr]] native expression — the tree
+    * walk runs inside whole-stage codegen on the unsafe feature array, and
+    * the model ships once per executor as a broadcast.
+    */
+  private def diseaseProb(spark: SparkSession, features: Column,
+      modelPath: String): Column =
+    XgbScoreExpr.score(features, spark.sparkContext.broadcast(loaded(modelPath)))
 
   /** The parsed model of each model file, kept while the file's
     * modification time and size stay the same: a 400-tree model takes
@@ -100,48 +101,65 @@ object Scorer {
     * reference) — NOT the imputed values, or every absent analyte would
     * inherit the population median and trip the rule.
     */
-  def questionFlags(df: DataFrame, lab: String => Column = col): DataFrame = df
-    .withColumn("q_prediabetes",
-      (coalesce(col("predm_prob"), lit(0.0)) >= 0.5) ||
-        (lab("hba1c_latest").isNotNull && lab("hba1c_latest") >= 5.7))
-    .withColumn("q_cvd",
-      (coalesce(col("cvd_prob"), lit(0.0)) >= 0.5) ||
-        (lab("ldl_latest").isNotNull && lab("ldl_latest") >= 130))
-    .withColumn("q_ckd",
-      (coalesce(col("ckd_prob"), lit(0.0)) >= 0.5) ||
-        (lab("creatinine_latest").isNotNull && lab("creatinine_latest") > 1.3) ||
-        (lab("egfr_latest").isNotNull && lab("egfr_latest") < 60))
-    .withColumn("q_anemia",
-      (coalesce(col("anemia_prob"), lit(0.0)) >= 0.5) ||
-        (lab("hemoglobin_latest").isNotNull && lab("hemoglobin_latest") < 12))
+  def questionFlags(df: DataFrame, lab: String => Column = col): DataFrame =
+    df.select(col("*") +: flagColumns(d => col(s"${d}_prob"), lab): _*)
+
+  /** The four M8 flags, `q_prediabetes`, `q_cvd`, `q_ckd`, `q_anemia`, from
+    * each disease's probability column and the raw labs.
+    */
+  private def flagColumns(prob: String => Column, lab: String => Column): Seq[Column] = Seq(
+    ((coalesce(prob("predm"), lit(0.0)) >= 0.5) ||
+      (lab("hba1c_latest").isNotNull && lab("hba1c_latest") >= 5.7)).as("q_prediabetes"),
+    ((coalesce(prob("cvd"), lit(0.0)) >= 0.5) ||
+      (lab("ldl_latest").isNotNull && lab("ldl_latest") >= 130)).as("q_cvd"),
+    ((coalesce(prob("ckd"), lit(0.0)) >= 0.5) ||
+      (lab("creatinine_latest").isNotNull && lab("creatinine_latest") > 1.3) ||
+      (lab("egfr_latest").isNotNull && lab("egfr_latest") < 60)).as("q_ckd"),
+    ((coalesce(prob("anemia"), lit(0.0)) >= 0.5) ||
+      (lab("hemoglobin_latest").isNotNull && lab("hemoglobin_latest") < 12)).as("q_anemia"))
 
   /** Raw lab columns M8 needs alongside the imputed/aligned model inputs. */
   private val questionLabs = Seq("hba1c_latest", "ldl_latest",
     "creatinine_latest", "egfr_latest", "hemoglobin_latest")
 
+  /** Diseases with a probability column in every [[inferAll]] output. */
+  private val diseases = Seq("predm", "cvd", "ckd", "anemia")
+
   /** Full pipeline: wide 19-col feature frame (+patient_id) → clustered,
     * aligned, scored for every model present in `modelPaths` (the reference
     * ships cvd/ckd/anemia; predm is absent — test.py:477 — so the surface
     * accepts any subset; q_* flags treat a missing model's prob as 0).
+    *
+    * Output columns: `patient_id`, the 14 model columns (imputed, with
+    * `cluster`), then `<d>_prob` and `<d>_label` (prob > 0.5) for each
+    * entry of `modelPaths` in its order, a null `<d>_prob` for each of
+    * predm/cvd/ckd/anemia without a model, and the four `q_*` flags.
+    * Six projections over `features` (one is [[impute]]'s `na.fill`); the
+    * model-feature array is built once per row for every model.
     */
   def inferAll(spark: SparkSession, features: DataFrame,
       modelPaths: Map[String, String],
       p: PipelineParams = PipelineParams.default): DataFrame = {
-    // carry the raw (pre-impute) labs through for the M8 rules
-    val withRaw = questionLabs.foldLeft(features)((acc, c) =>
-      acc.withColumn(s"__raw_$c", col(c)))
-    val clustered = addCluster(impute(withRaw, p), p)
-    val ready = clustered.select(
-      (col("patient_id") +: PipelineParams.modelColumns.map(col)) ++
-        questionLabs.map(c => col(s"__raw_$c")): _*)
-    val scored = modelPaths.foldLeft(ready) { case (acc, (disease, path)) =>
-      scoreDisease(spark, acc, disease, path)
-    }
-    val withProbs = Seq("predm", "cvd", "ckd", "anemia").foldLeft(scored) { (acc, d) =>
-      if (acc.columns.contains(s"${d}_prob")) acc
-      else acc.withColumn(s"${d}_prob", lit(null).cast("double"))
-    }
-    questionFlags(withProbs, lab => col(s"__raw_$lab"))
-      .drop(questionLabs.map(c => s"__raw_$c"): _*)
+    val raw: String => String = c => s"__raw_$c"
+    val rawLabs = questionLabs.map(c => col(raw(c)))
+    val model = PipelineParams.modelColumns.map(col)
+    val models = modelPaths.toSeq
+    // M1 over the features, carrying the raw (pre-impute) labs for M8
+    val imputed = impute(features.select(col("*") +: questionLabs.map(c => col(c).as(raw(c))): _*), p)
+    // M2-M5: the 13 imputed model columns, cluster, and the feature array
+    val ready = imputed.select((col("patient_id") +: model.init :+ cluster(p).as("cluster")) ++
+      rawLabs: _*)
+      .select((col("patient_id") +: model) ++ rawLabs :+ modelFeatures.as("__feat"): _*)
+    // M6: one probability per model
+    val scored = ready.select((col("patient_id") +: model) ++ rawLabs ++
+      models.map { case (d, path) => diseaseProb(spark, col("__feat"), path).as(s"${d}_prob") }: _*)
+    // labels (prob > 0.5, test.py:330), null probabilities of absent
+    // models, M8 flags
+    val prob: String => Column = d =>
+      if (modelPaths.contains(d)) col(s"${d}_prob") else lit(null).cast("double")
+    scored.select((col("patient_id") +: model) ++
+      models.flatMap { case (d, _) => Seq(col(s"${d}_prob"), (col(s"${d}_prob") > 0.5).as(s"${d}_label")) } ++
+      diseases.filterNot(modelPaths.contains).map(d => prob(d).as(s"${d}_prob")) ++
+      flagColumns(prob, lab => col(raw(lab))): _*)
   }
 }

@@ -18,8 +18,9 @@ import org.json4s.jackson.JsonMethods
   *    test.py:330).
   *
   * The model arrays are compact primitives — broadcast once, evaluated as a
-  * tight JVM loop per row (no shuffle; scoring is a narrow map). A custom
-  * codegen Expression would shave the UDF boxing, noted as future work.
+  * tight JVM loop per row (no shuffle; scoring is a narrow map). The
+  * [[XgbScoreExpr]] native expression calls that loop from whole-stage
+  * codegen on the unsafe feature array, with no boxing.
   */
 final case class XgbTree(
     splitIndices: Array[Int],

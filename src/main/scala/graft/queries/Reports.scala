@@ -22,9 +22,12 @@ import org.apache.spark.sql.functions._
   * values — we reproduce those semantics verbatim rather than "fixing" them,
   * since parity is defined by the reference.
   *
-  * Scale: one exchange for the window (partition key = (patient, analyte) —
-  * high cardinality, even spread), one for the group-by-patient pivot; both
-  * map-side-combined. Banding is pure projection (whole-stage codegen).
+  * Scale: one exchange, hash-partitioned on the patient, serves both the
+  * latest-per-(patient, analyte) window and the group-by-patient pivot.
+  * All of one patient's filtered rows land in one task (a window keyed on
+  * (patient, analyte) spread them over several), which matters only for a
+  * patient with millions of observations. Banding is pure projection
+  * (whole-stage codegen).
   */
 object Reports {
 
@@ -39,12 +42,18 @@ object Reports {
 
   /** Step 2: latest row per (idCol, keyCol) by (timeCol desc, tiebreak desc).
     * The reference idiom at Athena_queries_for_reports.sql:8,29.
+    *
+    * The rows are hash-partitioned on `idCol` alone before the window: that
+    * partitioning also satisfies the `(idCol, keyCol)` window and the
+    * `groupBy(idCol)` pivot every caller runs next, so the pair plans one
+    * exchange instead of two.
     */
   def latestPerKey(obs: DataFrame, idCol: String, keyCol: String,
       timeCol: String, tiebreak: String): DataFrame = {
     val w = Window.partitionBy(col(idCol), col(keyCol))
       .orderBy(col(timeCol).desc, col(tiebreak).desc)
-    obs.withColumn("rn", row_number().over(w)).filter(col("rn") === 1).drop("rn")
+    obs.repartition(col(idCol))
+      .withColumn("rn", row_number().over(w)).filter(col("rn") === 1).drop("rn")
   }
 
   /** Steps 1-3 for numeric analytes: IN-list filter, latest-per-key, then

@@ -8,7 +8,8 @@ import graft.queries.Reports
 
 /** DuckDB-oracle coverage for the ML numeric core (SURVEY §2.5 M1-M5): the
   * impute → standardize → PCA(14) → KMeans-assign pipeline is pure
-  * arithmetic over broadcast constants, so its DuckDB mirror is generated
+  * arithmetic over fixed constants (the [[graft.ml.PcaKMeans]] kernels on
+  * the Spark side), so its DuckDB mirror is generated
   * from the SAME PipelineParams instance with the same left-fold operation
   * order — doubles are bit-identical before the final rounding (the q27
   * unrolled-fold pattern).
@@ -34,13 +35,10 @@ object MlQueries {
         "value", "ts", "event_id",
         Seq("v0" -> "click", "v1" -> "view", "v2" -> "purchase",
           "v3" -> "error", "v4" -> "signup"))
-      val base = piv
-        .withColumn("age", (col("user_id") % 60 + 20).cast("double"))
-        .withColumn("sex", (col("user_id") % 2).cast("double"))
-      val withLabs = p.features.drop(2).zipWithIndex.foldLeft(base) {
-        case (acc, (f, j)) => acc.withColumn(f, col(s"v${j % 5}"))
-      }
-      val features = withLabs.select(col("user_id") +: p.features.map(col): _*)
+      val features = piv.select(col("user_id") +:
+        (col("user_id") % 60 + 20).cast("double").as("age") +:
+        (col("user_id") % 2).cast("double").as("sex") +:
+        p.features.drop(2).zipWithIndex.map { case (f, j) => col(s"v${j % 5}").as(f) }: _*)
       Scorer.addCluster(Scorer.impute(features, p), p, keepY = true)
         .select(col("user_id"), col("cluster").cast("long").as("cluster"),
           round(element_at(col("pca_y"), 1), 6).as("pca1"))

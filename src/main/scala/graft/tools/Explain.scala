@@ -20,12 +20,14 @@ object Explain {
       "q01_pricing_summary",   // pushdown + partial agg
       "q03_region_rollup",     // broadcast dim joins
       "q11_latest_per_group",  // single-exchange window
-      "q18_cvd_report",        // window + pivot + banding
+      "q18_cvd_report",        // window + pivot + banding, one exchange
+      "q19_t2d_report",        // the same shape with a text pivot
+      "q20_wellness_score",    // pivot + two-select wellness scoring
       "q24_minhash_dedup_pairs", // LSH candidate join + native expr + triangle split
       "q26_simhash_fingerprint", // native SimHash64 + hashed fingerprint (narrow map)
       "q27_cosine_topk",       // broadcast queries + native cosine
       "q29_asof_join",         // union-tag-window as-of
-      "q37_ml_cluster_pipeline", // impute/PCA/KMeans as one codegen projection
+      "q37_ml_cluster_pipeline", // impute + native PCA/k-means kernels
       "q38_lab_summary",       // pivot + explode-literal unpivot (no metadata join)
       "q39_embedding_dup_pairs", // hyperplane-LSH pair gen + exact verify
       "q40_simhash_dup_pairs", // pigeonhole block join over portable sigs

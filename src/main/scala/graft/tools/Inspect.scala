@@ -21,9 +21,11 @@ import graft.SparkEntry
   *
   *  - `run`: the row count, or the full stack trace (Bench and Verify
   *    swallow a query's exception by design); ends `ALL OK` or `FAILED: …`;
-  *  - `time`: wall time, row count and the number of classes Spark's
-  *    code generator compiled while the query ran (its generated-code
-  *    cache misses), per query, then the total;
+  *  - `time`: wall time, row count, the number of classes Spark's code
+  *    generator compiled while the query ran (its generated-code cache
+  *    misses) and the expression nodes of its optimized plan (the tree
+  *    the optimizer and the code generator walk), per query, then the
+  *    total;
   *  - `stages`: two noop-sink runs per query, each listing its slowest
   *    stages with wall time, tasks, CPU and shuffle volumes;
   *  - `explain`: the formatted plan plus every lineage-frozen subplan,
@@ -74,17 +76,28 @@ object Inspect {
     qs.foreach { case (name, fn) =>
       val c0 = compiles
       val t0 = System.nanoTime()
-      val n = try fn(spark, sfDir).count()
-        catch { case e: Throwable =>
-          println(f"[time] $name%-28s FAILED: ${String.valueOf(e.getMessage).take(120)}")
-          -1L
-        }
-        finally spark.catalog.clearCache()
+      val counted = try { val df = fn(spark, sfDir); Right(df -> df.count()) }
+        catch { case e: Throwable => Left(e) }
       val sec = (System.nanoTime() - t0) / 1e9
+      // the plan is sized outside the timed span, before the cache is cleared
+      val (n, exprs) = try counted match {
+          case Right((df, rows)) => (rows, exprNodes(df))
+          case Left(e) =>
+            println(f"[time] $name%-28s FAILED: ${String.valueOf(e.getMessage).take(120)}")
+            (-1L, -1)
+        } finally spark.catalog.clearCache()
       total += sec
-      println(f"[time] $name%-28s $sec%8.2f s  rows=$n  compiles=${compiles - c0}")
+      println(f"[time] $name%-28s $sec%8.2f s  rows=$n  compiles=${compiles - c0}  exprs=$exprs")
     }
     println(f"[time] TOTAL $total%.2f s")
+  }
+
+  /** Expression nodes in `df`'s optimized plan, subqueries included. */
+  def exprNodes(df: DataFrame): Int = {
+    var n = 0
+    df.queryExecution.optimizedPlan.foreachWithSubqueries(
+      _.expressions.foreach(_.foreach(_ => n += 1)))
+    n
   }
 
   private def stages(spark: SparkSession, sfDir: String, qs: Seq[Query]): Unit = {

@@ -133,19 +133,18 @@ object Wellness {
   }
 
   /** Add all five subscores + wellness + confidence + patterns to a wide
-    * frame whose analyte columns are named by `colFor`.
+    * frame whose analyte columns are named by `colFor`: two `select`s, the
+    * `sub_<disease>` columns (in disease-name order), then `wellness`,
+    * `confidence`, `patterns` and `liver_summary` over them.
     */
   def scoreWide(df: DataFrame, colFor: String => String): DataFrame = {
     val a: String => Column = name => col(colFor(name))
-    val withSubs = DiseaseWeights.keys.toSeq.sorted.foldLeft(df) { (acc, dis) =>
-      acc.withColumn(s"sub_${dis.toLowerCase}", subscore(dis, a))
-    }
+    val subs = DiseaseWeights.keys.toSeq.sorted.map(dis =>
+      subscore(dis, a).as(s"sub_${dis.toLowerCase}"))
     val sub: String => Column = dis => col(s"sub_${dis.toLowerCase}")
     val (score, conf) = wellness(sub)
-    withSubs
-      .withColumn("wellness", score)
-      .withColumn("confidence", conf)
-      .withColumn("patterns", patterns(a))
-      .withColumn("liver_summary", liverSummary(a))
+    df.select(col("*") +: subs: _*)
+      .select(col("*"), score.as("wellness"), conf.as("confidence"),
+        patterns(a).as("patterns"), liverSummary(a).as("liver_summary"))
   }
 }

@@ -44,6 +44,13 @@ class PlanSpec extends SparkSpec {
     assert(p.contains("user_id"), p)
   }
 
+  test("latest-per-key pivot plans one hash exchange for window and aggregate (q18)") {
+    val p = plan(SparkEntry.queries("q18_cvd_report")(spark, sf))
+    val exchanges = "Exchange hashpartitioning".r.findAllIn(p).length
+    assert(exchanges == 1, s"expected 1 hash exchange, plan:\n$p")
+    assert("Exchange hashpartitioning\\(user_id#\\d+L?, ".r.findFirstIn(p).isDefined, p)
+  }
+
   test("whole-stage codegen covers the banding projection") {
     val q18 = SparkEntry.queries("q18_cvd_report")(spark, sf)
     q18.collect() // AQE only materializes codegen spans in the final plan
@@ -601,15 +608,5 @@ class PlanSpec extends SparkSpec {
       _.isInstanceOf[graft.functions.GopherKeep]).isDefined) }.contains(true),
       s"the first freeze is not the gate:\n$gate")
     assert(kernels(gate) <= 2, gate.toString)
-  }
-
-  private def withSQLConf[A](pairs: (String, String)*)(f: => A): A = {
-    val conf = spark.conf
-    val olds = pairs.map { case (k, _) => k -> conf.getOption(k) }
-    pairs.foreach { case (k, v) => conf.set(k, v) }
-    try f finally olds.foreach {
-      case (k, Some(v)) => conf.set(k, v)
-      case (k, None) => conf.unset(k)
-    }
   }
 }

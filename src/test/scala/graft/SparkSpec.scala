@@ -13,4 +13,15 @@ object TestSpark {
 
 abstract class SparkSpec extends AnyFunSuite {
   lazy val spark: SparkSession = TestSpark.spark
+
+  /** Runs `f` with the given session confs set, then restores them. */
+  protected def withSQLConf[A](pairs: (String, String)*)(f: => A): A = {
+    val conf = spark.conf
+    val olds = pairs.map { case (k, _) => k -> conf.getOption(k) }
+    pairs.foreach { case (k, v) => conf.set(k, v) }
+    try f finally olds.foreach {
+      case (k, Some(v)) => conf.set(k, v)
+      case (k, None) => conf.unset(k)
+    }
+  }
 }

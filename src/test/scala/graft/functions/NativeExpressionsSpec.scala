@@ -1,21 +1,18 @@
 package graft.functions
 
-import graft.SparkSpec
+import graft.{CodegenParity, SparkSpec}
 import graft.core.{Tables => T}
 import graft.scale.{Dedup, Similarity, TextOps}
 import org.apache.spark.sql.catalyst.{CatalystTypeConverters, InternalRow}
-import org.apache.spark.sql.catalyst.expressions.{BoundReference, Expression,
-  InterpretedUnsafeProjection, UnsafeProjection}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenFallback,
-  GenerateUnsafeProjection}
+import org.apache.spark.sql.catalyst.expressions.BoundReference
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, FloatType,
+import org.apache.spark.sql.types.{ArrayType, DoubleType, FloatType,
   LongType, StringType}
 
 /** The native codegen expressions must be bit-identical to their
   * expression-combinator reference formulations — verified over real data.
   */
-class NativeExpressionsSpec extends SparkSpec {
+class NativeExpressionsSpec extends SparkSpec with CodegenParity {
 
   private val sf = "/root/testdata/sf0.001"
 
@@ -29,37 +26,6 @@ class NativeExpressionsSpec extends SparkSpec {
     Seq(5L, 17L, 99999L), Seq(3L, 3L, 3L), Seq(Long.MinValue, -2147483648L,
       -1L, 0L, 2147483646L, 2147483647L, Long.MaxValue),
     Seq(-9L, -9L, 4L, 1L << 40, -(1L << 40)))
-
-  /** Runs `expr`'s GENERATED code over `rows` (one value per
-    * [[BoundReference]] ordinal, as UnsafeRows like a real scan's) and
-    * checks every result byte-for-byte against `expr.eval`.
-    * `GenerateUnsafeProjection.generate` throws on a compile error instead
-    * of falling back to interpretation. A DataFrame over `Seq(...).toDF`
-    * would not do: the optimizer folds it into a LocalRelation by
-    * interpreted eval before any code is generated.
-    */
-  private def assertCodegenMatchesEval(expr: Expression,
-      rows: Seq[Seq[Any]]): Unit = {
-    assert(!expr.isInstanceOf[CodegenFallback],
-      s"${expr.prettyName} has no generated code")
-    val inputTypes: Array[DataType] = expr.collect { case b: BoundReference => b }
-      .sortBy(_.ordinal).map(_.dataType).toArray
-    val toUnsafe = UnsafeProjection.create(inputTypes)
-    val generated = GenerateUnsafeProjection.generate(Seq(expr),
-      subexpressionEliminationEnabled = false)
-    val evaluated = InterpretedUnsafeProjection.createProjection(
-      Seq(BoundReference(0, expr.dataType, nullable = true)))
-    rows.foreach { values =>
-      val row = toUnsafe(InternalRow.fromSeq(
-        values.map(CatalystTypeConverters.convertToCatalyst))).copy()
-      val viaEval = expr.eval(row)
-      val got = generated(row).copy()
-      val want = evaluated(InternalRow(viaEval))
-      def show(v: Any) = CatalystTypeConverters.convertToScala(v, expr.dataType)
-      assert(got == want, s"${expr.prettyName} on $values: generated " +
-        s"${show(got.get(0, expr.dataType))}, eval ${show(viaEval)}")
-    }
-  }
 
   test("whitespace_tokens == filter(split(text, \\s+), non-empty) on real and crafted text") {
     import spark.implicits._

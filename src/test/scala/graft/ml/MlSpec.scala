@@ -299,4 +299,72 @@ class MlSpec extends SparkSpec {
       assert(Scorer.loaded(f.getPath) eq second)
     } finally f.delete()
   }
+
+  /** Three small generated models (cvd, ckd, anemia; depth-1 trees over
+    * every model column, `cluster` included) and a 40-patient feature
+    * table with gaps, as Parquet: an `inferAll` input that needs no
+    * reference artifact.
+    */
+  private lazy val generated: (Map[String, String], String) = {
+    import spark.implicits._
+    val dir = java.nio.file.Files.createTempDirectory("infer")
+    val paths = Seq("cvd", "ckd", "anemia").zipWithIndex.map { case (d, m) =>
+      val trees = (0 until 14).map { f =>
+        val thr = if (f == 13) 1.5 else if (f == 1) 0.5 else 40.0 + 10 * m + f
+        s"""{"split_indices":[$f,0,0],"split_conditions":[$thr,${0.125 * (f % 3 - 1)},${0.25 - 0.0625 * m}],""" +
+          s""""left_children":[1,-1,-1],"right_children":[2,-1,-1],"default_left":[${(f + m) % 2},0,0]}"""
+      }
+      val json = """{"learner":{"learner_model_param":{"base_score":"[0.3]",""" +
+        """"num_feature":"14"},"gradient_booster":{"model":{"trees":[""" +
+        trees.mkString(",") + "]}}}}"
+      val f = dir.resolve(s"xgb_${d}_model.json")
+      java.nio.file.Files.write(f, json.getBytes("UTF-8"))
+      d -> f.toString
+    }.toMap
+    val p = PipelineParams.default
+    val rnd = new scala.util.Random(7)
+    val rows = (0 until 40).map { i =>
+      (s"p$i", p.features.indices.map { j =>
+        if (rnd.nextDouble() < 0.2) None
+        else Some(p.scalerMean(j) + p.scalerScale(j) * rnd.nextGaussian())
+      })
+    }
+    val wide = rows.toDF("patient_id", "xs")
+    val features = p.features.zipWithIndex.foldLeft(wide) { case (acc, (f, j)) =>
+      acc.withColumn(f, element_at(col("xs"), j + 1))
+    }.drop("xs")
+    val out = dir.resolve("features").toString
+    features.write.parquet(out)
+    (paths, out)
+  }
+
+  test("inferAll keeps the reference chain's schema, column order and values") {
+    val (models, features) = generated
+    val p = PipelineParams.default
+    Seq(models, models - "ckd", models + ("predm" -> models("cvd"))).foreach { m =>
+      val feat = spark.read.parquet(features)
+      val got = Scorer.inferAll(spark, feat, m, p)
+      val want = ScorerReference.inferAll(spark, feat, m, p)
+      assert(got.schema == want.schema, s"${got.schema.treeString}\nvs\n${want.schema.treeString}")
+      val rows = got.orderBy("patient_id").collect().toSeq
+      assert(rows == want.orderBy("patient_id").collect().toSeq)
+      assert(rows.length == 40 && rows.map(_.getAs[Int]("cluster")).forall(c => c >= 0 && c < 4))
+    }
+  }
+
+  test("a 3-model inferAll plans at most 600 expression nodes and recompiles nothing warm") {
+    val (models, features) = generated
+    val p = PipelineParams.default
+    def infer() = Scorer.inferAll(spark, spark.read.parquet(features), models, p)
+    val nodes = graft.tools.Inspect.exprNodes(infer())
+    val reference = graft.tools.Inspect.exprNodes(
+      ScorerReference.inferAll(spark, spark.read.parquet(features), models, p))
+    assert(nodes <= 600, s"$nodes expression nodes (the Column chain: $reference)")
+    assert(reference > 600, s"the Column chain plans only $reference nodes")
+    def compiles = org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+    infer().collect()
+    val c0 = compiles
+    assert(infer().collect().length == 40)
+    assert(compiles - c0 == 0, s"a warm inferAll compiled ${compiles - c0} classes")
+  }
 }

@@ -13,16 +13,6 @@ class LayoutSpec extends SparkSpec {
   private def tmp(name: String): String =
     java.nio.file.Files.createTempDirectory(name).toString
 
-  private def withSQLConf[A](pairs: (String, String)*)(f: => A): A = {
-    val conf = spark.conf
-    val olds = pairs.map { case (k, _) => k -> conf.getOption(k) }
-    pairs.foreach { case (k, v) => conf.set(k, v) }
-    try f finally olds.foreach {
-      case (k, Some(v)) => conf.set(k, v)
-      case (k, None) => conf.unset(k)
-    }
-  }
-
   test("sorted layout: row-group ranges disjoint, narrow filter prunes most groups") {
     import spark.implicits._
     val dir = tmp("graft_sorted")

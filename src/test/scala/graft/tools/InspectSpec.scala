@@ -23,7 +23,7 @@ class InspectSpec extends AnyFunSuite {
     assert(rc == 0, s"rc=$rc\n${out.takeRight(1200)}")
     val line = out.linesIterator.find(_.startsWith("[time] q01_pricing_summary"))
     assert(line.exists(_.matches(
-      raw"\[time\] q01_pricing_summary +[0-9.]+ s  rows=[1-9][0-9]*  compiles=[1-9][0-9]*")),
+      raw"\[time\] q01_pricing_summary +[0-9.]+ s  rows=[1-9][0-9]*  compiles=[1-9][0-9]*  exprs=[1-9][0-9]*")),
       out)
     assert(out.linesIterator.exists(_.startsWith("[time] TOTAL")), out)
   }
